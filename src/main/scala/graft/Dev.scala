@@ -15,11 +15,10 @@ object Dev {
     val df = build()
     if (args.contains("--explain")) df.explain("formatted")
     if (args.contains("--time") || args.contains("--time-cold")) {
-      // bench-shaped timing: warmup pass, then min of 2 noop-sink runs.
-      // --time-cold additionally releases all registry caches before
-      // every run — Bench releases at each family boundary, so its
-      // per-query numbers are CACHE-COLD; --time (cache-warm) can read
-      // 5× faster than what the bench will record
+      // warmup pass, then min of 2 noop-sink runs. --time-cold
+      // additionally releases all registry caches before every run, so
+      // the query pays its own shared materializations; --time
+      // (cache-warm) can read 5× faster than --time-cold
       val cold = args.contains("--time-cold")
       def once(): Double = {
         if (cold) graft.functions.CacheRegistry.releaseAll()

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *
   *   runMain graft.ScaleGen <srcSfDir> <dstDir> <factor>
   *
-  * The output feeds Bench/Dev only (scale measurement — the round-4
+  * The output feeds Verify/Dev only (scale measurement — the round-4
   * verdict's "turn the 'survives 100×' claims into measurement");
   * correctness gates keep running on the driver's own parquet.
   */

@@ -3,11 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The fleet-wide SparkSession configuration, shared by every main
-  * (Bench, BenchSubset, Verify, Dev, Plans, Pipeline, ScaleE2E,
-  * ScaleGen, StackScale, VarioScale) and the test JVM — one place for
-  * the settings that are load-bearing for a multi-hundred-plan session,
-  * so probe sessions (BenchSubset) provably mirror the measured one
-  * (Bench) instead of drifting copy-paste by copy-paste.
+  * (Verify, Dev, PlanDump, Plans, ScaleGen, StackScale, StreamScale,
+  * VarioScale), the perfbench harness and the test JVM — one place for
+  * the settings that are load-bearing for a multi-hundred-plan session.
   *
   * The one setting with a story: `spark.sql.codegen.cache.maxEntries`.
   * Spark's generated-class cache defaults to 100 entries; a session
@@ -21,15 +19,11 @@ import org.apache.spark.sql.SparkSession
   * the same sizing — see ARCHITECTURE.md §"Codegen class cache".
   */
 object Sessions {
-  val CodegenCacheEntries = "10000"
-
   /** Base builder with the fleet configuration. `extensions` registers
     * the Catalyst rules (graft.plans.GraftExtensions); the test JVM
     * leaves them off so specs opt in per-rule. */
   def builder(master: String, shufflePartitions: String,
-              extensions: Boolean = true,
-              aqe: String = "true",
-              codegenCache: String = CodegenCacheEntries): SparkSession.Builder = {
+              extensions: Boolean = true): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
@@ -37,25 +31,18 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.analyzer.failAmbiguousSelfJoin", "false")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.codegen.cache.maxEntries", codegenCache)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.ui.enabled", "false")
     if (extensions) b.config("spark.sql.extensions", "graft.plans.GraftExtensions")
     else b
   }
 
-  /** local[N] builder driven by the shared env levers:
-    * SPARK_GRAFT_CPUS (threads AND shuffle partitions),
-    * SPARK_GRAFT_AQE (results must be AQE-invariant — the gate's
-    * robustness probe flips this), and SPARK_GRAFT_CODEGEN_CACHE
-    * (override DOWN to 100 to reproduce the cache-thrash attribution). */
+  /** local[N] builder; N (threads AND shuffle partitions) comes from
+    * SPARK_GRAFT_CPUS, else `defaultCpus`. */
   def local(defaultCpus: String,
             extensions: Boolean = true): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    builder(s"local[$cpus]", cpus,
-      extensions = extensions,
-      aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true"),
-      codegenCache =
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", CodegenCacheEntries))
+    builder(s"local[$cpus]", cpus, extensions = extensions)
   }
 }

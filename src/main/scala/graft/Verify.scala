@@ -10,12 +10,11 @@ object Verify {
     // optional name filter for single-query iteration; the driver always
     // passes exactly two args, so its gate still dumps everything
     val only = args.drop(2).toSet
-    // shared fleet configuration (codegen-cache sizing, AQE lever): see
-    // Sessions — results must be AQE-invariant, SPARK_GRAFT_AQE probes it
+    // shared fleet configuration (codegen-cache sizing): see Sessions
     val spark = Sessions.local("4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Family-scoped cache release (see Bench): shared persisted frames are
+    // Family-scoped cache release: shared persisted frames are
     // only reused within one name-prefix family, so drop them at each
     // boundary to keep the dump's storage footprint one-family-bounded.
     var prevFam: String = null
@@ -30,7 +29,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        if (sys.env.contains("GRAFT_VERIFY_TRACE")) e.printStackTrace()
+        e.printStackTrace()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

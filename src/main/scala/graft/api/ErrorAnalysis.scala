@@ -342,8 +342,8 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
 
 object ErrorAnalysis {
   /** THE seeded MC pair generator shared by [[ErrorAnalysis.uncertainty]],
-    * [[ErrorAnalysis.uncertaintyHetero]], [[ErrorAnalysis.uncertaintyFull]]
-    * and ScaleE2E's σ_corr bootstrap band: `3·nPairs` bbox-uniform
+    * [[ErrorAnalysis.uncertaintyHetero]] and [[ErrorAnalysis.uncertaintyFull]]
+    * (whose σ_corr bootstrap band it feeds): `3·nPairs` bbox-uniform
     * candidate pairs from the counter RNG (salts seed+1..seed+4), both
     * endpoints accepted inside the polygon, the first `nPairs` accepted
     * draw ids kept. Factored out (ADVICE r13) so no caller can re-encode

@@ -113,7 +113,16 @@ object VariogramFit {
   }
 
   /** Full model search: k ∈ {1,2,3} × nugget ∈ {yes,no} × 5 guesses,
-    * argmin AIC = 2·np + n·ln(RSS/n) (variography_uncertainty.py:833). */
+    * argmin AIC = 2·np + n·ln(RSS/n) (variography_uncertainty.py:833).
+    *
+    * Only candidates whose every range stays within 2× the largest bin
+    * lag are eligible — with the reference's maxLag = ½ diagonal, that
+    * bound is the raster diagonal. Past the data a spherical component is
+    * linear in h and only its sill/range ratio is identified, so bins
+    * that rise slightly past their plateau otherwise win the AIC with a
+    * component at thousands of times the max lag and a sill many times
+    * the field variance. If no candidate is eligible, the plain argmin
+    * stands. */
   def fit(bins: Seq[Bin], seed: Long = 42L, nGuesses: Int = 5): FitResult = {
     require(bins.nonEmpty, "empty variogram")
     val configs = for (k <- 1 to 3; ng <- Seq(false, true)) yield (k, ng)
@@ -130,7 +139,9 @@ object VariogramFit {
       FitResult(SphericalModel(sills, ranges, if (ng) p(2 * k) else 0.0),
         rss, aic, k, ng)
     }
-    results.minBy(_.aic)
+    val maxRange = 2.0 * bins.map(_.lag).max
+    val eligible = results.filter(_.model.ranges.forall(_ <= maxRange))
+    (if (eligible.nonEmpty) eligible else results).minBy(_.aic)
   }
 
   /** Parametric bootstrap: `nBoot` synthetic variograms (γ ± N(0, σ_bin))
@@ -217,7 +228,7 @@ object VariogramFit {
     *
     * Degenerate-bin guard: a boundary sliver bin observed with a handful
     * of pairs can draw a near-zero cross-run std by chance (measured:
-    * ScaleE2E --from-las W=768, bin at exactly maxLag with mean_n=15 and
+    * the point-cloud survey at W=768, bin at exactly maxLag with mean_n=15 and
     * std 2e-6 vs healthy-bin stds ~3e-4) — 1/σ then hands one
     * meaningless bin ~100× every other bin's weight and the optimizer
     * trades all the healthy bins away to chase it (fitted range 1e5,

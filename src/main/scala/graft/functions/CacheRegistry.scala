@@ -11,9 +11,10 @@ import scala.collection.mutable.ArrayBuffer
   * identical builder calls share the entry. A bare `.persist()` however
   * leaks those blocks for the lifetime of a long-lived session (judge
   * round 4, "What's wrong" #3). Every shared persist therefore goes
-  * through [[share]], and harness epilogues (Bench, Verify,
-  * CacheHygieneSpec) call [[releaseAll]] to return storage memory to
-  * baseline once the query family is done.
+  * through [[share]] — CacheHygieneSpec fails the build on a bare
+  * `.persist()`/`.cache()` anywhere else in the engine — and harness
+  * epilogues (Verify, perfbench, CacheHygieneSpec) call [[releaseAll]]
+  * to return storage memory to baseline once the query family is done.
   *
   * Thread safety: registration is synchronized; `releaseAll` unpersists
   * lazily-registered duplicates harmlessly (unpersist on an uncached

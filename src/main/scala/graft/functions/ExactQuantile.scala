@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -39,159 +39,20 @@ case class DoubleBitsFolded(child: Expression)
     copy(newChild)
 }
 
-/** Distributed EXACT quantile with linear interpolation (numpy /
-  * quantile_cont semantics) via rank-selection instead of Spark's
-  * `Percentile` buffer aggregate.
+/** Distributed EXACT order statistics and interpolated quantiles (numpy
+  * / quantile_cont semantics) by multi-pass radix selection over the
+  * folded IEEE-754 bit pattern, instead of Spark's `Percentile` buffer
+  * aggregate.
   *
   * `Percentile` materializes every value into a per-partition heap and
   * merges them on one thread — fine for grouped small data, hopeless for a
-  * tail quantile of a 100-TB column. Selecting the order statistics with
-  * `orderBy(...).limit(k)` instead plans as TakeOrderedAndProject:
-  * per-partition top-k, driver merges k rows — O(n log k) work, no full
-  * shuffle, no big collect. For p near 1 the sort flips descending so
-  * k stays ~(1−p)·n. (A 100-TB extreme would binary-search value ranges
-  * instead; this covers the p∈[0.01, 0.99] clip quantiles.)
+  * tail quantile of a 100-TB column. Radix selection resolves 16 bits per
+  * pass with an aggregation-only histogram job: exactly 4 scans, no sort,
+  * no row shuffle, a few-KB collect, at any depth of any relation size.
+  * [[nthsByRadix]] is the single-column form, [[groupedNthsByRadix]] the
+  * per-group form, [[quantilesByRadix]] the interpolating wrapper.
   */
 object ExactQuantile {
-
-  /** Exact interpolated quantile of `c` (no NULLs expected). Runs 2 tiny
-    * TopK jobs + one count. */
-  def quantile(df: DataFrame, c: String, p: Double): Double = {
-    val n = df.count()
-    require(n > 0, "quantile of empty relation")
-    val pos = p * (n - 1)
-    val lo = math.floor(pos).toLong
-    val hi = math.ceil(pos).toLong
-    val frac = pos - lo
-    def nthAsc(i: Long): Double = {
-      val k = math.min(i + 1, n - i) // rows the TopK must retain
-      require(k <= Int.MaxValue,
-        s"rank-selection needs a top-$k limit which overflows Int " +
-          s"(n=$n, p=$p); use an approximate quantile or a value-range " +
-          "binary search for quantiles this deep into a huge relation")
-      if (i < n - i) // fetch from the front
-        df.select(col(c)).orderBy(col(c).asc).limit((i + 1).toInt)
-          .agg(max(c)).head().getDouble(0)
-      else // fetch from the back: asc position i = desc position n-1-i
-        df.select(col(c)).orderBy(col(c).desc).limit((n - i).toInt)
-          .agg(min(c)).head().getDouble(0)
-    }
-    val vLo = nthAsc(lo)
-    val vHi = if (hi == lo) vLo else nthAsc(hi)
-    vLo + (vHi - vLo) * frac
-  }
-
-  /** Exact order statistic by VALUE-RANGE bisection — the 100-TB path the
-    * rank-selection guard points at. Finds the i-th ascending value (0-based)
-    * without sorting, shuffling, or collecting anything row-sized: each
-    * iteration is one full-scan `count(value <= mid)` aggregate (a few bytes
-    * to the driver), and the search interval halves on the FLOAT64 BIT
-    * PATTERN, so it terminates in ≤64 probes with the exact value — no
-    * epsilon, no interpolation error. Monotone bit-pattern trick: for
-    * finite doubles, (sign-folded) long ordering equals numeric ordering.
-    */
-  def nthByBisection(df: DataFrame, c: String, i: Long): Double = {
-    val v = col(c).cast("double")
-    val row = df.agg(min(v), max(v), count(v)).head()
-    val (lo0, hi0, n) = (row.getDouble(0), row.getDouble(1), row.getLong(2))
-    require(i >= 0 && i < n, s"order statistic $i out of range [0, $n)")
-    def toBits(d: Double): Long = {
-      val b = java.lang.Double.doubleToLongBits(d)
-      if (b < 0) Long.MinValue - b else b // fold negatives: order-preserving
-    }
-    def fromBits(l: Long): Double =
-      java.lang.Double.longBitsToDouble(if (l < 0) Long.MinValue - l else l)
-    var lo = toBits(lo0)
-    var hi = toBits(hi0)
-    // invariant: the answer key is in [lo, hi] — the smallest key whose
-    // count(value <= key) exceeds i, which is exactly the i-th value's key
-    // (count steps only at data values)
-    while (lo < hi) {
-      // overflow-free signed floor-average: hi - lo can exceed Long.MaxValue
-      // when the keys straddle zero (e.g. min ≈ -1e18, max ≈ +1e18)
-      val mid = (lo & hi) + ((lo ^ hi) >> 1)
-      val cnt = df.filter(v <= fromBits(mid)).count()
-      if (cnt <= i) lo = mid + 1 else hi = mid
-    }
-    fromBits(lo)
-  }
-
-  /** Interpolated quantile via [[nthByBisection]] — same numpy semantics
-    * as [[quantile]], but every probe is a scan+count, so it works at any
-    * depth of any relation size (≤ ~130 scans; in practice far fewer when
-    * the value range is narrow). Prefer [[quantile]] when (1−p)·n or p·n
-    * fits an Int; prefer this beyond that. */
-  def quantileByBisection(df: DataFrame, c: String, p: Double): Double = {
-    val n = df.count()
-    require(n > 0, "quantile of empty relation")
-    val pos = p * (n - 1)
-    val lo = math.floor(pos).toLong
-    val hi = math.ceil(pos).toLong
-    val frac = pos - lo
-    val vLo = nthByBisection(df, c, lo)
-    val vHi = if (hi == lo) vLo else nthByBisection(df, c, hi)
-    vLo + (vHi - vLo) * frac
-  }
-
-  /** BATCHED value-range bisection: all requested order statistics advance
-    * in lockstep, one scan per round computing every active probe's
-    * `count(value <= mid)` as parallel conditional sums in a single
-    * aggregate. Total cost ≤ ~64 scans REGARDLESS of how many statistics
-    * are requested (vs 64·k for k independent [[nthByBisection]] calls) —
-    * this is the shape a multi-quantile clip wants at 100 TB. */
-  def nthsByBisection(df: DataFrame, c: String, is: Seq[Long]): Map[Long, Double] = {
-    if (is.isEmpty) return Map.empty
-    val v = col(c).cast("double")
-    val row = df.agg(min(v), max(v), count(v)).head()
-    val (lo0, hi0, n) = (row.getDouble(0), row.getDouble(1), row.getLong(2))
-    is.foreach(i => require(i >= 0 && i < n, s"order statistic $i out of range [0, $n)"))
-    def toBits(d: Double): Long = {
-      val b = java.lang.Double.doubleToLongBits(d)
-      if (b < 0) Long.MinValue - b else b
-    }
-    def fromBits(l: Long): Double =
-      java.lang.Double.longBitsToDouble(if (l < 0) Long.MinValue - l else l)
-    var active = is.distinct.map(i => i -> ((toBits(lo0), toBits(hi0)))).toMap
-    val done = scala.collection.mutable.Map.empty[Long, Double]
-    while (active.nonEmpty) {
-      val (conv, open) = active.partition { case (_, (lo, hi)) => lo >= hi }
-      conv.foreach { case (i, (lo, _)) => done(i) = fromBits(lo) }
-      if (open.isEmpty) { active = open }
-      else {
-        val probes = open.toSeq.map { case (i, (lo, hi)) =>
-          (i, (lo & hi) + ((lo ^ hi) >> 1))
-        }
-        val aggs = probes.map { case (i, mid) =>
-          sum(when(v <= fromBits(mid), 1L).otherwise(0L)).as(s"c$i")
-        }
-        val r = df.agg(aggs.head, aggs.tail: _*).head()
-        active = probes.zipWithIndex.map { case ((i, mid), idx) =>
-          val cnt = r.getLong(idx)
-          val (lo, hi) = open(i)
-          if (cnt <= i) i -> ((mid + 1, hi)) else i -> ((lo, mid))
-        }.toMap
-      }
-    }
-    done.toMap
-  }
-
-  /** Interpolated quantiles for several p at once via [[nthsByBisection]]
-    * — one count + ≤ ~64 batched probe scans total. */
-  def quantilesByBisection(df: DataFrame, c: String, ps: Seq[Double]): Map[Double, Double] = {
-    val n = df.count()
-    require(n > 0, "quantile of empty relation")
-    val targets = ps.map { p =>
-      val pos = p * (n - 1)
-      (p, math.floor(pos).toLong, math.ceil(pos).toLong, pos - math.floor(pos))
-    }
-    val nths = nthsByBisection(df, c,
-      targets.flatMap { case (_, lo, hi, _) => Seq(lo, hi) }.distinct)
-    targets.map { case (p, lo, hi, frac) =>
-      val vLo = nths(lo)
-      val vHi = nths(hi)
-      p -> (vLo + (vHi - vLo) * frac)
-    }.toMap
-  }
 
   private def fromFoldedBits(l: Long): Double =
     java.lang.Double.longBitsToDouble(if (l < 0) java.lang.Long.MIN_VALUE - l else l)
@@ -201,9 +62,9 @@ object ExactQuantile {
     * regardless of data size, value distribution, or how many statistics
     * are requested. Each pass is an aggregation-only job — map-side
     * combining into ≤65536 buckets per live prefix, no sort, no row
-    * shuffle, a few-KB collect — so this beats both the TakeOrdered form
-    * (k≈p·n per-partition retention) and bisection (≤64 sequential probe
-    * jobs). The preferred engine path for any quantile of anything big.
+    * shuffle, a few-KB collect — where a TakeOrdered selection retains
+    * k≈p·n rows per partition and a value-range bisection runs ≤64
+    * sequential probe jobs.
     * Requires a known total row count `n` of non-null `c` values (the
     * caller usually has it from the same agg that produced min/max).
     *

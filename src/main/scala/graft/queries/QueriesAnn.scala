@@ -964,7 +964,8 @@ object QueriesAnn {
       .filter(col("crn") === 1)
       .select(col("vec_id"), col("v"), col("c_id").as("cluster"))
     // bits is a driver-side SCALAR (the Zonal-radix/variogram-fit
-    // precedent: the collect is inside the builder, so Bench times it):
+    // precedent: the collect is inside the builder, so a timing of the
+    // query includes it):
     // mean codebook-cell occupancy occ = ceil(n / NCENTROIDS) needs only
     // the corpus row count (a parquet-metadata count — no assignment
     // materialization), and the plan is then built with EXACTLY `bits`

@@ -334,8 +334,8 @@ object QueriesExt {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     // bits/bands derived driver-side from the corpus count (the collect
-    // is inside the builder, so Bench times it); only live planes are
-    // ever computed — a sum of live planes equals a full-width
+    // is inside the builder, so a timing of the query includes it); only
+    // live planes are ever computed — a sum of live planes equals a full-width
     // signature `& mask`, bit for bit, so it matches the oracle's
     // static-structure form at any width
     val bits = rpBitsFor(e.count())

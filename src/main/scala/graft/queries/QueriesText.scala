@@ -672,9 +672,8 @@ object QueriesText {
     // bytes), and the shingle+md5 work runs at full parallelism instead
     // of inside the scan task (the local fixture is one parquet file →
     // one scan partition, which serialized the whole hash pass).
-    val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
     val sh = Tables.documents(s, d)
-      .repartition(nPart, col("doc_id"))
+      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), TextOps.words(col("text")).as("w"))
       .select(col("doc_id"),
         posexplode(TextOps.shinglesOf(col("w"), 3)).as(Seq("pos", "sh")))

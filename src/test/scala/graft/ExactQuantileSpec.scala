@@ -8,27 +8,6 @@ class ExactQuantileSpec extends SparkSuite {
 
   private lazy val li = Tables.lineitem(spark, sf001)
 
-  test("rank-selection and bisection quantiles agree with Percentile") {
-    for (p <- Seq(0.01, 0.25, 0.5, 0.75, 0.99)) {
-      val exact = li.agg(percentile(col("l_extendedprice"), lit(p)))
-        .head().getDouble(0)
-      val topk = ExactQuantile.quantile(li, "l_extendedprice", p)
-      val bisect = ExactQuantile.quantileByBisection(li, "l_extendedprice", p)
-      assert(math.abs(topk - exact) < 1e-9, s"topk p=$p: $topk vs $exact")
-      assert(math.abs(bisect - exact) < 1e-9, s"bisect p=$p: $bisect vs $exact")
-    }
-  }
-
-  test("bisection order statistic is exact on negatives, zeros, duplicates") {
-    val vals = Seq(-5.5, -5.5, -0.0, 0.0, 0.0, 1.25, 1.25, 3.0, 1e18, -1e18)
-    val df = vals.toDF("v")
-    val sorted = vals.sorted
-    for (i <- vals.indices) {
-      val got = ExactQuantile.nthByBisection(df, "v", i.toLong)
-      assert(got == sorted(i), s"i=$i: $got vs ${sorted(i)}")
-    }
-  }
-
   test("radix selection is exact on negatives, zeros, duplicates — all ranks at once") {
     val vals = Seq(-5.5, -5.5, -0.0, 0.0, 0.0, 1.25, 1.25, 3.0, 1e18, -1e18,
       1e-300, -1e-300, 42.0)

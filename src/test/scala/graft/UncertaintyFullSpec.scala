@@ -87,14 +87,42 @@ class UncertaintyFullSpec extends SparkSuite {
     // ea.uncertainty's correlated term = sqrt(mean cov) over acceptedPairs;
     // pushing the POINT fit through uncertaintyFull's polygon scope (one
     // degenerate draw) must reproduce it exactly — same pairs, same γ —
-    // which is the structural coupling ADVICE r13 asked for (the old
-    // ScaleE2E band rebuilt the pair set by hand and only a comment kept
-    // the salts aligned).
+    // which is the structural coupling ADVICE r13 asked for (a band that
+    // rebuilds the pair set by hand keeps the salts aligned only by a
+    // comment).
     val rep = ea.uncertainty(dz, Seq("poly" -> polyWkt), model,
       nPairs = 2000, seed = 42L).head()
     val full = ea.uncertaintyFull(dz, "poly", polyWkt, fit,
       Array(pointP), nPairs = 2000, seed = 42L)
     assert(math.abs(rep.getAs[Double]("correlated") -
       full.corrTotalPolygon.central) < 1e-12)
+  }
+
+  test("hetero: a constant sigma map of sqrt(total sill) reproduces uncertainty") {
+    // E[ρ·σX·σY] with σ ≡ √σ²_tot is algebraically E[σ²_tot − γ(h)], the
+    // homoscedastic correlated term, over the same accepted pairs
+    // (estimate_monte_carlo with sigma_func=None ≡ constant σ)
+    val cell = 8.0
+    val rep = ea.uncertainty(dz, Seq("poly" -> polyWkt), model,
+      nPairs = 2000, seed = 42L).head()
+    val nCells = 64 / cell.toInt + 1
+    val constSig = spark.range(nCells.toLong * nCells).select(
+      (col("id") % nCells).as("gx"), (col("id") / nCells).cast("long").as("gy"),
+      lit(math.sqrt(model.totalSill)).as("sigma"))
+    val hetero = ea.uncertaintyHetero(dz, Seq("poly" -> polyWkt), model,
+      constSig, cell, nPairs = 2000, seed = 42L).head()
+    assert(math.abs(hetero.getAs[Double]("correlated") -
+      rep.getAs[Double]("correlated")) < 1e-6)
+    assert(hetero.getAs[Long]("nPixels") == rep.getAs[Long]("nPixels"))
+    assert(hetero.getAs[Double]("uncorrelated") == rep.getAs[Double]("uncorrelated"))
+
+    // the data-driven map: one RMS per 8×8 cell, and |ρ| ≤ 1 bounds the
+    // heteroscedastic term by the largest cell σ
+    val sig = ea.sigmaMap(dz, cell)
+    val st = sig.agg(count(lit(1)), max("sigma")).head()
+    assert(st.getLong(0) == 64L)
+    val fromMap = ea.uncertaintyHetero(dz, Seq("poly" -> polyWkt), model,
+      sig, cell, nPairs = 2000, seed = 42L).head().getAs[Double]("correlated")
+    assert(fromMap >= 0.0 && fromMap <= st.getDouble(1) + 1e-9, s"corr $fromMap")
   }
 }

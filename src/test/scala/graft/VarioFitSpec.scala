@@ -80,6 +80,32 @@ class VarioFitSpec extends SparkSuite {
     b1.values.foreach { case (p16, p50, p84) =>
       assert(p16 <= p50 && p50 <= p84)
     }
+    // the point fit lies inside its own 16–84 band, per parameter
+    val m = best.model
+    val point = m.sills.zipWithIndex.map { case (c, i) => s"sill${i + 1}" -> c } ++
+      m.ranges.zipWithIndex.map { case (a, i) => s"range${i + 1}" -> a } ++
+      (if (best.hasNugget) Seq("nugget" -> m.nugget) else Nil)
+    assert(b1.keySet == point.map(_._1).toSet)
+    point.foreach { case (name, v) =>
+      val (p16, _, p84) = b1(name)
+      assert(v >= p16 && v <= p84, s"$name=$v outside [$p16, $p84]")
+    }
+  }
+
+  test("fit keeps every range inside the lag domain when bins rise past the plateau") {
+    // a plateau with a slight linear rise after it: an unbounded search
+    // fits the rise with an extra component whose range runs far past
+    // the largest lag (only its sill/range ratio is identified there)
+    val truth = SphericalModel(Seq(1.0), Seq(15.0), 0.0)
+    val bins = (0 until 24).map { i =>
+      val lag = (i + 0.5) * 2.0
+      Bin(lag, truth.gammaTotal(lag) + 0.004 * lag, 1.0)
+    }
+    val maxLag = bins.map(_.lag).max
+    val best = VariogramFit.fit(bins)
+    assert(best.model.ranges.forall(_ <= 2.0 * maxLag), s"out-of-domain fit $best")
+    val main = best.model.ranges(best.model.sills.indexOf(best.model.sills.max))
+    assert(main > 10.0 && main < 30.0, s"main range $main")
   }
 
   test("spherical gamma column expr matches scalar evaluation") {
