@@ -238,7 +238,11 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
     // whole-raster uncorrelated term + extents (one aggregate)
     val ext = dz.agg(count(lit(1)), sqrt(avg(col("value") * col("value"))),
       min("x"), max("x"), min("y"), max("y")).head()
-    val (nValid, rms) = (ext.getLong(0), ext.getDouble(1))
+    val nValid = ext.getLong(0)
+    // clear failure over an empty Δz frame: the aggregates are NULL and
+    // getDouble would throw ROW_VALUE_IS_NULL
+    require(nValid > 0, "uncertaintyFull: the dz frame has no valid pixels")
+    val rms = ext.getDouble(1)
     val (minX, maxX, minY, maxY) =
       (ext.getDouble(2), ext.getDouble(3), ext.getDouble(4), ext.getDouble(5))
     val uncorr = rms / math.sqrt(nValid.toDouble)

@@ -1,7 +1,11 @@
 package graft.raster
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, shiftleft}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Physical layout for pixel tables at scale (SURVEY.md §4 "Physical
   * layout decisions"): write rasters as bucketed+sorted tables on the
@@ -54,8 +58,9 @@ object Layout {
   /** Morton (Z-order) interleave of two non-negative 32-bit grid keys
     * into one 64-bit locality key — the standard bit-spread (each input
     * doubled in width through five mask-and-shift rounds, then the two
-    * spreads interleaved). Pure shift/and/or column arithmetic, so the
-    * key is whole-stage-codegen'd at the scan.
+    * spreads interleaved), compiled as one [[ZOrder]] expression so the
+    * key is whole-stage-codegen'd at the scan. Only the low 32 bits of
+    * each (long-cast) key take part.
     *
     * WHY at 100 TB: a raster sorted row-major prunes file/rowgroup
     * min-max stats on ONE axis only — a bbox crop on the other axis
@@ -64,17 +69,8 @@ object Layout {
     * once (the same layout decision Delta/Iceberg expose as Z-ORDER
     * clustering; the bbox crop is the reference's hottest spatial
     * predicate, differencing_functions.py:787–790). */
-  def zOrder(c: Column, r: Column): Column = {
-    def spread(v: Column): Column =
-      Seq((16, 0x0000FFFF0000FFFFL), (8, 0x00FF00FF00FF00FFL),
-          (4, 0x0F0F0F0F0F0F0F0FL), (2, 0x3333333333333333L),
-          (1, 0x5555555555555555L))
-        .foldLeft(v.cast("long").bitwiseAND(lit(0xFFFFFFFFL))) {
-          case (x, (sh, mask)) =>
-            x.bitwiseOR(shiftleft(x, sh)).bitwiseAND(lit(mask))
-        }
-    spread(c).bitwiseOR(shiftleft(spread(r), 1))
-  }
+  def zOrder(c: Column, r: Column): Column =
+    toCol(ZOrder(toExpr(c.cast("long")), toExpr(r.cast("long"))))
 
   /** Reference Morton interleave for the spec's cross-check. */
   private[graft] def zOrderRef(c: Int, r: Int): Long = {
@@ -102,4 +98,40 @@ object Layout {
       .drop("__z")
       .write.mode("overwrite").parquet(path)
   }
+}
+
+/** [[Layout.zOrder]] as one Catalyst expression over two `long` keys.
+  * `eval` is [[Layout.zOrderRef]]; `doGenCode` emits the five
+  * mask-and-shift rounds on one local per key. Native because each
+  * round reads its input twice: as Column arithmetic one spread is a 32×
+  * copy of its input subtree in the generated code. */
+case class ZOrder(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = LongType
+  override def prettyName: String = "z_order"
+
+  override protected def nullSafeEval(c: Any, r: Any): Any =
+    Layout.zOrderRef(c.asInstanceOf[Long].toInt, r.asInstanceOf[Long].toInt)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    def spread(v: String): (String, String) = {
+      val x = ctx.freshName("x")
+      val rounds = Seq((16, "0x0000FFFF0000FFFFL"), (8, "0x00FF00FF00FF00FFL"),
+        (4, "0x0F0F0F0F0F0F0F0FL"), (2, "0x3333333333333333L"),
+        (1, "0x5555555555555555L"))
+        .map { case (sh, mask) => s"$x = ($x | ($x << $sh)) & $mask;" }
+      ((s"long $x = $v & 0xFFFFFFFFL;" +: rounds).mkString("\n"), x)
+    }
+    nullSafeCodeGen(ctx, ev, (c, r) => {
+      val (cCode, cx) = spread(c)
+      val (rCode, rx) = spread(r)
+      s"""
+        $cCode
+        $rCode
+        ${ev.value} = $cx | ($rx << 1);
+      """
+    })
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }

@@ -1,7 +1,11 @@
 package graft.rng
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Deterministic counter-based RNG, the engine's reproducibility backbone
   * (SURVEY.md §2.7, §7.4 item 1).
@@ -20,7 +24,7 @@ import org.apache.spark.sql.functions._
 object Rand {
   val M: Long = 2147483648L // 2^31 — keeps all products < 2^63
 
-  private def saltC(salt: Long): Long = (12345L + salt * 2654435761L) % M
+  private[rng] def saltC(salt: Long): Long = (12345L + salt * 2654435761L) % M
 
   /** Driver-side scalar twin of [[mix]] — same constants, same output.
     *
@@ -44,15 +48,15 @@ object Rand {
     * (corr(u_salt1, u_salt2) ≈ −0.21, enough to bias Monte-Carlo pair
     * distances by 2×); the third round with interleaved xor-shifts drops
     * it below 0.004 (validated against an independent RNG in
-    * EstimatorSpec's MC-vs-brute-force agreement). */
-  def mix(key: Column, salt: Long): Column = {
-    val h1 = (key % M * lit(1103515245L) + lit(saltC(salt))) % M
-    val h1x = h1.bitwiseXOR((h1 / 8192L).cast("long"))
-    val h2 = (h1x * lit(69069L) + lit(362437L)) % M
-    val h2x = h2.bitwiseXOR((h2 / 131072L).cast("long"))
-    val h3 = (h2x * lit(48271L) + lit(11L)) % M
-    h3.bitwiseXOR((h3 / 32768L).cast("long"))
-  }
+    * EstimatorSpec's MC-vs-brute-force agreement).
+    *
+    * Built as one [[CounterMix]] node, not as Column arithmetic: each
+    * round reads its input twice, so the Column spelling copies its
+    * subtree 8× per call, and Filter (no common-subexpression
+    * elimination) plus pushed-down and bbox-prefilter conjuncts copy it
+    * again — hundreds of KB of generated Java per sampling stage. */
+  def mix(key: Column, salt: Long): Column =
+    toCol(CounterMix(toExpr(key.cast("long")), salt))
 
   def mixSql(key: String, salt: Long): String = {
     val h1 = s"((($key) % $M) * 1103515245 + ${saltC(salt)}) % $M"
@@ -83,4 +87,39 @@ object Rand {
     val u2 = u01Sql(key, salt + 7777)
     s"(sqrt(-2.0 * ln($u1)) * cos(${2.0 * math.Pi} * $u2))"
   }
+}
+
+/** [[Rand.mix]] as one Catalyst expression over a `long` key. `eval` is
+  * [[Rand.mixLong]] (one definition for engine and driver); `doGenCode`
+  * emits the same three rounds on one local. The salt is bound through
+  * the `references` array, not inlined as a literal, so plans that differ
+  * only by seed generate byte-identical source and share one compiled
+  * class from the codegen cache. */
+case class CounterMix(child: Expression, salt: Long) extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def prettyName: String = "counter_mix"
+  override def sql: String = s"$prettyName(${child.sql}, $salt)"
+
+  override protected def nullSafeEval(key: Any): Any =
+    Rand.mixLong(key.asInstanceOf[Long], salt)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("saltC", java.lang.Long.valueOf(Rand.saltC(salt)))
+    val sc = ctx.addMutableState(CodeGenerator.JAVA_LONG, "saltC",
+      v => s"$v = $ref.longValue();")
+    val m = s"${Rand.M}L"
+    nullSafeCodeGen(ctx, ev, k => {
+      val h = ctx.freshName("h")
+      s"""
+        long $h = (($k % $m) * 1103515245L + $sc) % $m;
+        $h ^= $h / 8192L;
+        $h = ($h * 69069L + 362437L) % $m;
+        $h ^= $h / 131072L;
+        $h = ($h * 48271L + 11L) % $m;
+        ${ev.value} = $h ^ ($h / 32768L);
+      """
+    })
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

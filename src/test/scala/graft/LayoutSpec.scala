@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.raster.{Layout, PixelGrid}
+import graft.raster.{Layout, PixelGrid, ZOrder}
 
 /** Proves the ARCHITECTURE.md layout claim at the plan level: bucketed
   * pixel tables make the differencing join shuffle-free. */
@@ -82,6 +82,44 @@ class LayoutSpec extends SparkSuite {
     // other fixed (locality requires order preservation per axis)
     assert(Layout.zOrderRef(5, 9) < Layout.zOrderRef(6, 9))
     assert(Layout.zOrderRef(5, 9) < Layout.zOrderRef(5, 10))
+  }
+
+  test("ZOrder: interpreted eval equals codegen and the Column formula") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.LongType
+    import spark.implicits._
+    // the Column-arithmetic spelling the native node replaced
+    def columnZ(c: Column, r: Column): Column = {
+      def spread(v: Column): Column =
+        Seq((16, 0x0000FFFF0000FFFFL), (8, 0x00FF00FF00FF00FFL),
+            (4, 0x0F0F0F0F0F0F0F0FL), (2, 0x3333333333333333L),
+            (1, 0x5555555555555555L))
+          .foldLeft(v.cast("long").bitwiseAND(lit(0xFFFFFFFFL))) {
+            case (x, (sh, mask)) =>
+              x.bitwiseOR(shiftleft(x, sh)).bitwiseAND(lit(mask))
+          }
+      spread(c).bitwiseOR(shiftleft(spread(r), 1))
+    }
+    val keys = Seq(0L, 1L, 5L, 9L, 65535L, 65536L, Int.MaxValue.toLong,
+      0xFFFFFFFFL, (1L << 40) + 7, -1L, -123456L)
+    val pairs = for (c <- keys; r <- keys) yield (c, r)
+    val e = ZOrder(BoundReference(0, LongType, nullable = true),
+      BoundReference(1, LongType, nullable = true))
+    val gen = GenerateUnsafeProjection.generate(Seq(e))
+    pairs.foreach { case (c, r) =>
+      val want = Layout.zOrderRef(c.toInt, r.toInt)
+      assert(e.eval(InternalRow(c, r)) == want, s"eval ($c, $r)")
+      assert(gen(InternalRow(c, r)).getLong(0) == want, s"codegen ($c, $r)")
+    }
+    assert(e.eval(InternalRow(null, 3L)) == null)
+    assert(gen(InternalRow(3L, null)).isNullAt(0))
+    val mismatches = pairs.toDF("c", "r")
+      .filter(Layout.zOrder(col("c"), col("r")) =!= columnZ(col("c"), col("r")))
+      .count()
+    assert(mismatches == 0)
   }
 
   test("z-ordered layout prunes a bbox on BOTH axes; row-major stripes cannot") {

@@ -164,4 +164,25 @@ class PlanQualitySpec extends SparkSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
   }
+
+  test("acceptedPairs: one compact generated stage, identical source for every seed") {
+    // the counter RNG is one native node with its salt bound by
+    // reference: spelled as Column arithmetic each draw copied its subtree
+    // 8×, Filter (no CSE) and the bbox prefilter copied the draws again
+    // (678 KB of Java), and per-seed salt literals forced a recompile
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val prev = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = prev :+ graft.plans.PipBboxPrefilter
+    try {
+      val pts = Seq((8.0, 8.0), (56.0, 8.0), (56.0, 56.0), (8.0, 56.0))
+      def stages(seed: Long): Seq[String] = codegenStringSeq(
+        graft.api.ErrorAnalysis.acceptedPairs(spark, pts, 5000, seed)
+          .queryExecution.executedPlan).map(_._2)
+      val a = stages(1L)
+      assert(a.nonEmpty, "acceptedPairs should run whole-stage codegen")
+      a.foreach(c => assert(c.length < 64 * 1024,
+        s"generated stage is ${c.length / 1024} KB"))
+      assert(stages(2L) == a, "seed changed the generated source")
+    } finally spark.experimental.extraOptimizations = prev
+  }
 }

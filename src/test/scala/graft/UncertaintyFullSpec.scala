@@ -125,4 +125,12 @@ class UncertaintyFullSpec extends SparkSuite {
       sig, cell, nPairs = 2000, seed = 42L).head().getAs[Double]("correlated")
     assert(fromMap >= 0.0 && fromMap <= st.getDouble(1) + 1e-9, s"corr $fromMap")
   }
+
+  test("an empty dz frame fails with a clear message, not a null-row error") {
+    val empty = dz.filter(col("x") < 0)
+    val e = intercept[IllegalArgumentException] {
+      ea.uncertaintyFull(empty, "poly", polyWkt, fit, draws(4), nPairs = 100)
+    }
+    assert(e.getMessage.contains("no valid pixels"), e.getMessage)
+  }
 }
