@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The fleet-wide SparkSession configuration, shared by every main
-  * (Verify, Dev, PlanDump, Plans, ScaleGen, StackScale, StreamScale,
-  * VarioScale), the perfbench harness and the test JVM — one place for
-  * the settings that are load-bearing for a multi-hundred-plan session.
+/** The fleet-wide SparkSession configuration, shared by the mains that
+  * open a session (Verify, Dev, ScaleGen), the perfbench harness and the
+  * test JVM — one place for the settings that are load-bearing for a
+  * multi-hundred-plan session.
   *
   * The one setting with a story: `spark.sql.codegen.cache.maxEntries`.
   * Spark's generated-class cache defaults to 100 entries; a session

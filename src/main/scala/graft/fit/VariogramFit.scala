@@ -6,16 +6,18 @@ import graft.functions.SphericalModel
 import graft.rng.{Rand => CRand}
 
 /** Driver-side weighted nested-spherical variogram fitting — the Spark
-  * re-expression of the reference's `scipy.optimize.curve_fit` (TRF) search
-  * (variography_uncertainty.py:651–659, 731–844): 6 model configs (1–3
-  * spherical components × ±nugget) × 5 jittered initial guesses, weighted
-  * least squares via Levenberg–Marquardt, best config by AIC (:833–844).
+  * re-expression of the reference's bounded `scipy.optimize.curve_fit`
+  * search (variography_uncertainty.py:651–659, 731–844): 6 model configs
+  * (1–3 spherical components × ±nugget) × 5 jittered initial guesses,
+  * weighted least squares, best config by AIC (:833–844). The reference
+  * box-bounds a trust-region solver; here Levenberg–Marquardt runs on a
+  * parameterization that cannot leave the box (see [[lm]]).
   *
   * Design per SURVEY.md §2.11/§7.3: the empirical variogram is tiny
   * (≤ runs×bins rows), so fitting is DRIVER-side Breeze on the collected
-  * table — nothing grid-sized ever reaches the driver. The 500-draw
-  * parametric bootstrap fans out as a Spark job over fit tasks
-  * (`Dataset[Long].mapPartitions`), mirroring :609–666, 877–923.
+  * table — nothing grid-sized ever reaches the driver. The parametric
+  * bootstrap (100 draws by default) fans out as a Spark job over fit
+  * tasks (`Dataset[Long].mapPartitions`), mirroring :609–666, 877–923.
   *
   * Randomness is the engine's counter RNG, so fits are bit-reproducible
   * run-to-run (seed discipline, notebook cell 8). Fit OUTPUTS are declared
@@ -28,67 +30,81 @@ object VariogramFit {
   case class FitResult(model: SphericalModel, rss: Double, aic: Double,
                        nComponents: Int, hasNugget: Boolean)
 
-  /** γ(h) for parameter vector [C1..Ck, a1..ak, nugget?] (nugget LAST —
-    * the reference's load-bearing convention, variography_uncertainty.py:
-    * 597–607). */
-  def gammaOf(p: DenseVector[Double], k: Int, nugget: Boolean)(h: Double): Double = {
-    var g = if (nugget) p(2 * k) else 0.0
-    var i = 0
-    while (i < k) {
-      val c = p(i); val a = p(k + i)
-      g += (if (h < a) c * (1.5 * h / a - 0.5 * math.pow(h / a, 3)) else c)
-      i += 1
+  /** Natural parameters [C1..Ck, a1..ak, nugget?] (nugget LAST — the
+    * reference's load-bearing convention, variography_uncertainty.py:
+    * 597–607) from the unconstrained θ that [[lm]] searches: sills and
+    * nugget are |θ|, each range is 2·maxLag·sigmoid(θ). */
+  private def natural(t: DenseVector[Double], k: Int, maxLag: Double): DenseVector[Double] =
+    DenseVector.tabulate(t.length) { i =>
+      if (i >= k && i < 2 * k) 2.0 * maxLag / (1.0 + math.exp(-t(i))) else math.abs(t(i))
     }
-    g
+
+  /** Weighted residuals w·(γ(h) − γ̂) at θ and their analytic Jacobian
+    * ∂r/∂θ: the spherical partials ∂γ/∂C = 1.5u − 0.5u³ and
+    * ∂γ/∂a = 1.5·C·u·(u² − 1)/a for u = h/a < 1 (1 and 0 past the range),
+    * ∂γ/∂nugget = 1, chained through [[natural]] (d|θ|/dθ = sign θ,
+    * da/dθ = a·(1 − a/(2·maxLag))). */
+  private[graft] def residuals(bins: Seq[Bin], k: Int, nugget: Boolean, maxLag: Double,
+                               t: DenseVector[Double]): (DenseVector[Double], DenseMatrix[Double]) = {
+    val p = natural(t, k, maxLag)
+    def sign(x: Double) = if (x < 0) -1.0 else 1.0
+    val r = DenseVector.zeros[Double](bins.length)
+    val j = DenseMatrix.zeros[Double](bins.length, t.length)
+    for ((b, row) <- bins.zipWithIndex) {
+      var g = if (nugget) p(2 * k) else 0.0
+      if (nugget) j(row, 2 * k) = b.weight * sign(t(2 * k))
+      for (i <- 0 until k) {
+        val c = p(i); val a = p(k + i); val u = b.lag / a
+        val shape = if (u < 1.0) 1.5 * u - 0.5 * u * u * u else 1.0
+        g += c * shape
+        j(row, i) = b.weight * shape * sign(t(i))
+        if (u < 1.0) j(row, k + i) = b.weight * 1.5 * c * u * (u * u - 1.0) * (1.0 - a / (2.0 * maxLag))
+      }
+      r(row) = b.weight * (g - b.gamma)
+    }
+    (r, j)
   }
 
-  /** Weighted Levenberg–Marquardt over the spherical parameterization.
-    * Parameters are kept positive by optimizing their absolute value. */
+  /** Weighted Levenberg–Marquardt in the θ of [[natural]] with the
+    * analytic Jacobian: every model it returns has sills and nugget ≥ 0 and
+    * each range in (0, 2·maxLag], maxLag the largest lag of `bins` (the
+    * raster diagonal at the reference's maxLag = ½ diagonal). Unbounded,
+    * bins rising past their plateau pull a range to thousands of max lags,
+    * where only a component's sill/range ratio is identified. `init` and
+    * the result are natural parameters, the latter with its weighted RSS. */
   def lm(bins: Seq[Bin], k: Int, nugget: Boolean, init: DenseVector[Double],
          maxIter: Int = 200): (DenseVector[Double], Double) = {
-    val n = bins.length
+    val maxLag = bins.map(_.lag).max
     val np = init.length
-    var p = init.copy
-    def residuals(p: DenseVector[Double]): DenseVector[Double] = {
-      val pa = p.map(math.abs)
-      DenseVector(bins.map(b =>
-        (gammaOf(pa, k, nugget)(b.lag) - b.gamma) * b.weight).toArray)
+    var t = DenseVector.tabulate(np) { i => // inverse of natural; ranges clamped into the domain
+      val f = math.min(math.max(init(i) / (2.0 * maxLag), 1e-9), 1.0 - 1e-9)
+      if (i >= k && i < 2 * k) math.log(f / (1.0 - f)) else init(i)
     }
-    def rss(p: DenseVector[Double]): Double = {
-      val r = residuals(p); r dot r
-    }
-    var lambda = 1e-3
-    var cur = rss(p)
-    var iter = 0
+    var (r, j) = residuals(bins, k, nugget, maxLag, t)
+    var cur = r dot r
+    var lambda = 1e-3; var iter = 0
     while (iter < maxIter && lambda < 1e10) {
-      // numeric Jacobian
-      val j = DenseMatrix.zeros[Double](n, np)
-      val r0 = residuals(p)
-      var c = 0
-      while (c < np) {
-        val dp = math.max(1e-8, math.abs(p(c)) * 1e-6)
-        val p2 = p.copy; p2(c) += dp
-        val r2 = residuals(p2)
-        j(::, c) := (r2 - r0) / dp
-        c += 1
-      }
-      val jtj = j.t * j
-      val g = j.t * r0
-      var improved = false
-      var tries = 0
+      val jtj = j.t * j; val g = j.t * r
+      var improved = false; var tries = 0
       while (!improved && tries < 20) {
         val damped = jtj + DenseMatrix.eye[Double](np) * lambda
         val step = try pinv(damped) * g catch { case _: Exception => DenseVector.zeros[Double](np) }
-        val pNew = p - step
-        val rssNew = rss(pNew)
+        val tNew = t - step
+        val (rNew, jNew) = residuals(bins, k, nugget, maxLag, tNew)
+        val rssNew = rNew dot rNew
         if (rssNew < cur) {
-          p = pNew; cur = rssNew; lambda = math.max(lambda / 3.0, 1e-12); improved = true
+          t = tNew; r = rNew; j = jNew; cur = rssNew
+          lambda = math.max(lambda / 3.0, 1e-12); improved = true
         } else { lambda *= 3.0; tries += 1 }
       }
       if (!improved) iter = maxIter else iter += 1
     }
-    (p.map(math.abs), cur)
+    (natural(t, k, maxLag), cur)
   }
+
+  private def modelOf(p: DenseVector[Double], k: Int, nugget: Boolean): SphericalModel =
+    SphericalModel((0 until k).map(p(_)), (0 until k).map(i => p(k + i)),
+      if (nugget) p(2 * k) else 0.0)
 
   /** Jittered initial guess g-th for config (k, nugget) — ±50% jitter via
     * the counter RNG (variography_uncertainty.py:806–810). */
@@ -114,40 +130,17 @@ object VariogramFit {
 
   /** Full model search: k ∈ {1,2,3} × nugget ∈ {yes,no} × 5 guesses,
     * argmin AIC = 2·np + n·ln(RSS/n) (variography_uncertainty.py:833).
-    *
-    * Only candidates whose every range stays within 2× the largest bin
-    * lag are eligible — with the reference's maxLag = ½ diagonal, that
-    * bound is the raster diagonal. Past the data a spherical component is
-    * linear in h and only its sill/range ratio is identified, so bins
-    * that rise slightly past their plateau otherwise win the AIC with a
-    * component at thousands of times the max lag and a sill many times
-    * the field variance. If no candidate is eligible, the plain argmin
-    * stands. */
+    * Every candidate is in the lag domain by construction of [[lm]]. */
   def fit(bins: Seq[Bin], seed: Long = 42L, nGuesses: Int = 5): FitResult = {
-    require(bins.nonEmpty, "empty variogram")
-    val configs = for (k <- 1 to 3; ng <- Seq(false, true)) yield (k, ng)
-    val results = for {
-      (k, ng) <- configs
-      g <- 0 until nGuesses
-    } yield {
+    require(bins.length >= 3, s"a variogram fit needs at least 3 bins, got ${bins.length}")
+    val n = bins.length
+    (for (k <- 1 to 3; ng <- Seq(false, true); g <- 0 until nGuesses) yield {
       val (p, rss) = lm(bins, k, ng, initialGuess(bins, k, ng, g, seed))
-      val np = p.length
-      val n = bins.length
-      val aic = 2.0 * np + n * math.log(math.max(rss / n, 1e-300))
-      val sills = (0 until k).map(p(_))
-      val ranges = (0 until k).map(i => p(k + i))
-      FitResult(SphericalModel(sills, ranges, if (ng) p(2 * k) else 0.0),
-        rss, aic, k, ng)
-    }
-    val maxRange = 2.0 * bins.map(_.lag).max
-    val eligible = results.filter(_.model.ranges.forall(_ <= maxRange))
-    (if (eligible.nonEmpty) eligible else results).minBy(_.aic)
+      val aic = 2.0 * p.length + n * math.log(math.max(rss / n, 1e-300))
+      FitResult(modelOf(p, k, ng), rss, aic, k, ng)
+    }).minBy(_.aic)
   }
 
-  /** Parametric bootstrap: `nBoot` synthetic variograms (γ ± N(0, σ_bin))
-    * re-fitted in parallel via mapPartitions over a Dataset of draw ids —
-    * the fan-out of variography_uncertainty.py:609–666. Returns per-param
-    * 16/50/84 percentiles for the WINNING config. */
   /** Raw bootstrap parameter draws (nBoot rows × param vector) — the
     * propagation input when a σ-LEVEL band is wanted instead of
     * per-parameter bands (the reference re-estimates σ_corr per draw,
@@ -156,6 +149,7 @@ object VariogramFit {
   def bootstrapFits(spark: SparkSession, bins: Seq[Bin], sigmas: Seq[Double],
                     best: FitResult, nBoot: Int = 100, seed: Long = 42L)
       : Array[Array[Double]] = {
+    require(nBoot > 0, s"the bootstrap needs at least one draw, got nBoot = $nBoot")
     import spark.implicits._
     val k = best.nComponents; val ng = best.hasNugget
     val binArr = bins.toArray; val sigArr = sigmas.toArray
@@ -172,13 +166,16 @@ object VariogramFit {
     }.collect()
   }
 
+  /** Parametric bootstrap: `nBoot` synthetic variograms (γ ± N(0, σ_bin))
+    * re-fitted in parallel via mapPartitions over a Dataset of draw ids —
+    * the fan-out of variography_uncertainty.py:609–666. Returns per-param
+    * 16/50/84 percentiles for the WINNING config. */
   def bootstrap(spark: SparkSession, bins: Seq[Bin], sigmas: Seq[Double],
                 best: FitResult, nBoot: Int = 100, seed: Long = 42L)
       : Map[String, (Double, Double, Double)] = {
     val k = best.nComponents; val ng = best.hasNugget
     val fits = bootstrapFits(spark, bins, sigmas, best, nBoot, seed)
-    val np = fits.head.length
-    (0 until np).map { i =>
+    fits.head.indices.map { i =>
       val vals = fits.map(_(i)).sorted
       def pct(q: Double): Double = {
         val pos = q * (vals.length - 1)
@@ -190,9 +187,7 @@ object VariogramFit {
   }
 
   private def paramName(i: Int, k: Int, ng: Boolean): String =
-    if (i < k) s"sill${i + 1}"
-    else if (i < 2 * k) s"range${i - k + 1}"
-    else "nugget"
+    if (i < k) s"sill${i + 1}" else if (i < 2 * k) s"range${i - k + 1}" else "nugget"
 
   /** Deterministic standard normal from the counter RNG (Box–Muller). */
   def gaussian(ctr: Long, seed: Long): Double = {
@@ -201,22 +196,27 @@ object VariogramFit {
     math.sqrt(-2.0 * math.log(u1)) * math.cos(2.0 * math.Pi * u2)
   }
 
+  /** The refits of 5-fold CV on the winning config: (held-out bins, model
+    * fitted on the rest) for each fold that leaves ≥ 4 training bins. */
+  def cvRefits(bins: Seq[Bin], best: FitResult, seed: Long = 42L)
+      : Seq[(Seq[Bin], SphericalModel)] = {
+    val k = best.nComponents; val ng = best.hasNugget
+    bins.zipWithIndex.groupBy { case (_, i) => (CRand.mixLong(i.toLong, seed) % 5).toInt }
+      .values.map(_.map(_._1)).toSeq.map(test => (test, bins.filterNot(test.contains)))
+      .collect { case (test, train) if train.size >= 4 =>
+        test -> modelOf(lm(train, k, ng, initialGuess(train, k, ng, 0, seed))._1, k, ng)
+      }
+  }
+
   /** 5-fold CV of the winning config: RMSE/MAE/ME/MSE on held-out bins
     * (variography_uncertainty.py:679–729). */
   def crossValidate(bins: Seq[Bin], best: FitResult, seed: Long = 42L)
       : Map[String, Double] = {
-    val folds = bins.zipWithIndex.groupBy { case (_, i) =>
-      (CRand.mixLong(i.toLong, seed) % 5).toInt
-    }.values.map(_.map(_._1)).toSeq
-    val errs = folds.flatMap { test =>
-      val train = bins.filterNot(test.contains)
-      if (train.size < 4) Nil
-      else {
-        val (p, _) = lm(train, best.nComponents, best.hasNugget,
-          initialGuess(train, best.nComponents, best.hasNugget, 0, seed))
-        test.map(b => gammaOf(p, best.nComponents, best.hasNugget)(b.lag) - b.gamma)
-      }
+    val errs = cvRefits(bins, best, seed).flatMap { case (test, m) =>
+      test.map(b => m.gammaTotal(b.lag) - b.gamma)
     }
+    require(errs.nonEmpty,
+      s"cross-validation needs a fold that leaves at least 4 training bins, got ${bins.length} bins")
     val n = errs.size.toDouble
     val mse = errs.map(e => e * e).sum / n
     Map("rmse" -> math.sqrt(mse), "mae" -> errs.map(math.abs).sum / n,

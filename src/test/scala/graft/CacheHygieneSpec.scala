@@ -41,25 +41,12 @@ class CacheHygieneSpec extends SparkSuite {
   test("every engine persist goes through CacheRegistry") {
     // a bare .persist()/.cache() outlives the query that made it: nothing
     // registers it, so releaseAll can never return its blocks
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"engine sources not found at ${root.getAbsolutePath}")
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap { f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-      }
-    // string and char literals, block and line comments: blanked, keeping
-    // line numbers, so only code is searched
-    val nonCode = """(?s)"{3}.*?"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|/\*.*?\*/|//[^\n]*""".r
     val bare = """\.persist\(|\.cache\(\)""".r
     val offenders = for {
-      f <- scalaFiles(root) if f.getName != "CacheRegistry.scala"
-      code = nonCode.replaceAllIn(
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"),
-        m => "\n" * m.matched.count(_ == '\n'))
-      (line, n) <- code.split("\n", -1).zipWithIndex
+      f <- SourceScan.files if f.getName != "CacheRegistry.scala"
+      (line, n) <- SourceScan.code(f).split("\n", -1).zipWithIndex
       if bare.findFirstIn(line).isDefined
-    } yield s"${root.toPath.relativize(f.toPath)}:${n + 1}"
+    } yield s"${SourceScan.relative(f)}:${n + 1}"
     assert(offenders.isEmpty,
       s"bare persist/cache outside CacheRegistry: ${offenders.mkString(", ")}")
   }

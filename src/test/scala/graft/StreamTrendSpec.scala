@@ -56,8 +56,8 @@ class StreamTrendSpec extends SparkSuite {
 
   test("the RocksDB state store provider reproduces the same final state") {
     // the 100-TB deployment's configuration (state off-heap per shard);
-    // same stack, same parity claim, exercised through RocksDB — the
-    // survey-scale measurement lives in graft.StreamScale
+    // same stack, same parity claim, exercised through RocksDB (the
+    // survey-scale measurement at 10⁷ pixels is recorded in NOTES.md)
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
