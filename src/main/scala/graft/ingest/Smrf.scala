@@ -2,112 +2,168 @@ package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuilder
 import graft.functions.Canon.round
+import graft.raster.HaloTile
+
+/** One non-noise point shipped to tile (tc, tr): its home tile, or a
+  * neighbour tile whose halo holds its cell. */
+private[ingest] case class TilePt(tc: Int, tr: Int, x: Double, y: Double, z: Double)
 
 /** Morphological ground re-classification — the engine analog of the
   * reference's `filters.smrf` PDAL stage (differencing_functions.py:
   * 1672–1676: assign Classification = 0 → smrf → keep class 2), i.e.
   * the Simple Morphological Filter of Pingel, Clarke & McBride 2013.
   *
-  * Shape, Spark-first: SMRF is a raster morphology over the per-cell
-  * MINIMUM surface, so every stage is a bounded grid-bucketed aggregate —
-  * the same offset-explode neighbor pattern as the terrain kernels and
-  * gap-fill, never a point-pair join:
+  * SMRF is a raster morphology over the per-cell MINIMUM surface of 1 m
+  * cells. The single-window forms ([[groundPoints]], [[reclassify]]) run
+  * it as one halo-tile kernel:
   *
-  *   1. min-z per 1 m cell (one hash aggregate over the cloud),
-  *   2. EROSION: min over each cell's 3×3 neighborhood (offset-explode +
-  *      re-aggregate, inner-joined back to real cells),
-  *   3. DILATION of the eroded surface: max over 3×3 — together an
-  *      OPENING that removes above-ground bumps narrower than the window
-  *      while following the terrain,
-  *   4. a point is ground (class 2) iff z − opened(cell) ≤ THRESHOLD,
-  *      else unclassified (1). Noise classes (7, 18) are dropped first,
-  *      mirroring the pipeline's preceding range filter, and input
-  *      classifications are otherwise IGNORED (the `assign 0` stage).
+  *   1. noise classes (7, 18) are dropped, mirroring the pipeline's
+  *      preceding range filter; input classifications are otherwise
+  *      IGNORED (the `assign 0` stage),
+  *   2. each point is routed ([[HaloTile.route]]) to its home
+  *      [[TileCells]]×[[TileCells]] tile and to every neighbour tile
+  *      whose [[HaloCells]]-cell halo holds its cell — the only shuffle,
+  *   3. per tile, a dense local pass builds the min-z surface, ERODES it
+  *      (min over each existing cell's 3×3 neighbourhood) and DILATES the
+  *      eroded surface (max over 3×3) — together an OPENING that removes
+  *      above-ground bumps narrower than the window while following the
+  *      terrain — and classifies each home point as ground (class 2) iff
+  *      z − opened(cell) ≤ THRESHOLD.
   *
-  * [[reclassify]] is the single-window form (the decision rule at
-  * window 1); [[reclassifyMultiWindow]] (round 6) runs PDAL's full
-  * schedule — min-inpaint, growing windows, slope-scaled thresholds,
-  * object-cell mask — and reduces to the single-window form at
-  * window=1/slope=0/no-inpaint (property-tested). At 100 TB every stage
-  * shuffles cell rows (≪ point rows) on the cell key; the final
-  * classify is one equi-join of points to cells.
+  * Erode and dilate read EXISTING cells only (sparse-grid semantics,
+  * shared with the DuckDB oracle [[reclassifySql]]); min and max are
+  * order-free, so the kernel is bit-identical to the oracle. The points
+  * are consumed once: nothing is persisted or joined back.
+  *
+  * [[reclassifyMultiWindow]] (round 6) runs PDAL's full schedule —
+  * min-inpaint, growing windows, slope-scaled thresholds, object-cell
+  * mask — as cell-keyed offset-explode aggregates (its window-5 halo and
+  * bbox-wide inpaint do not fit a small tile), and reduces to the
+  * single-window form at window=1/slope=0/no-inpaint (property-tested).
   */
 object Smrf {
 
   val Threshold = 0.5 // PDAL filters.smrf default elevation threshold (m)
 
-  private val offsets = for (dc <- -1 to 1; dr <- -1 to 1) yield (dc, dr)
+  /** Tile edge of the single-window kernel, in cells. */
+  val TileCells = 32
+  /** Halo of the single-window kernel, in cells: the 3×3 erode reads cell
+    * minima at ±1, the 3×3 dilate of the eroded surface at ±2. */
+  val HaloCells = 2
 
-  /** 3×3 morphological pass: aggregate `agg(v)` over each existing
-    * cell's neighborhood (existing cells only — sparse-grid semantics,
-    * shared with the oracle). r14: targets are kept iff their (0,0)
-    * offset row exists (the own marker), so ONE explode-aggregate
-    * replaces the aggregate + real-cell join-back — the input is
-    * consumed once and the per-stage join exchange disappears. */
-  private def neighborAgg(cells: DataFrame, v: String, doMin: Boolean,
-                          out: String): DataFrame = {
-    // offset-explode: each source cell contributes to its 9 targets
-    val moved = cells.select(
-      explode(array(offsets.map { case (dc, dr) =>
-        struct((col("c") + dc).as("c"), (col("r") + dr).as("r"),
-          col(v).as("v"), lit(dc == 0 && dr == 0).as("own"))
-      }: _*)).as("t"))
-      .select(col("t.c").as("c"), col("t.r").as("r"), col("t.v").as("v"),
-        col("t.own").as("own"))
-    moved.groupBy("c", "r")
-      .agg((if (doMin) min(col("v")) else max(col("v"))).as(out),
-        max(col("own")).as("keep"))
-      .filter(col("keep"))
-      .select("c", "r", out)
+  // Spark's double order: NaN sorts above every number
+  private def sMin(a: Double, b: Double): Double = if (b < a || a.isNaN) b else a
+  private def sMax(a: Double, b: Double): Double = if (b > a || b.isNaN) b else a
+
+  /** The dense single-window pass over one tile: the min surface, erode
+    * and dilate over the halo-extended box, and the tile's home points. */
+  private final class TileOpening(tc: Int, tr: Int, it: Iterator[TilePt]) {
+    private val T = TileCells
+    private val H = HaloCells
+    private val E = T + 2 * H // edge of the halo-extended box
+    private val c0 = tc * T - H
+    private val r0 = tr * T - H
+    private val has = new Array[Boolean](E * E)
+    private val zmin = new Array[Double](E * E)
+    private val xs = new ArrayBuilder.ofDouble
+    private val ys = new ArrayBuilder.ofDouble
+    private val zs = new ArrayBuilder.ofDouble
+    private val cells = new ArrayBuilder.ofInt
+    it.foreach { p =>
+      val lc = math.floor(p.x).toInt - c0
+      val lr = math.floor(p.y).toInt - r0
+      val i = lr * E + lc
+      zmin(i) = if (has(i)) sMin(zmin(i), p.z) else p.z
+      has(i) = true
+      if (lc >= H && lc < H + T && lr >= H && lr < H + T) {
+        xs += p.x; ys += p.y; zs += p.z; cells += i
+      }
+    }
+
+    /** Min or max of `v` over the existing 3×3 neighbours of every
+      * existing cell within `reach` of the home box. */
+    private def pass(v: Array[Double], reach: Int, doMin: Boolean): Array[Double] = {
+      val out = new Array[Double](E * E)
+      var lr = H - reach
+      while (lr < H + T + reach) {
+        var lc = H - reach
+        while (lc < H + T + reach) {
+          val i = lr * E + lc
+          if (has(i)) {
+            var acc = v(i)
+            var dr = -1
+            while (dr <= 1) {
+              var dc = -1
+              while (dc <= 1) {
+                val n = i + dr * E + dc
+                if (has(n)) acc = if (doMin) sMin(acc, v(n)) else sMax(acc, v(n))
+                dc += 1
+              }
+              dr += 1
+            }
+            out(i) = acc
+          }
+          lc += 1
+        }
+        lr += 1
+      }
+      out
+    }
+
+    private val opened = pass(pass(zmin, 1, doMin = true), 0, doMin = false)
+    private val hx = xs.result(); private val hy = ys.result()
+    private val hz = zs.result(); private val hcell = cells.result()
+    private def ground(k: Int): Boolean = hz(k) - opened(hcell(k)) <= Threshold
+
+    /** The home points within [[Threshold]] of the opened surface. */
+    def groundPoints: Iterator[(Double, Double, Double)] =
+      hz.indices.iterator.filter(ground).map(k => (hx(k), hy(k), hz(k)))
+
+    /** Per home cell: (col, row, n_points, n_ground, zmin, opened_z). */
+    def summary: Iterator[(Int, Int, Long, Long, Double, Double)] = {
+      val n = new Array[Long](E * E)
+      val g = new Array[Long](E * E)
+      hcell.indices.foreach { k =>
+        n(hcell(k)) += 1
+        if (ground(k)) g(hcell(k)) += 1
+      }
+      n.indices.iterator.filter(n(_) > 0).map(i =>
+        (c0 + i % E, r0 + i / E, n(i), g(i), zmin(i), opened(i)))
+    }
+  }
+
+  /** Non-noise points grouped by halo tile. */
+  private def tiles(pts: DataFrame) = {
+    import pts.sparkSession.implicits._
+    HaloTile.route(pts.filter(!col("classification").isin(7, 18)).select("x", "y", "z"),
+        floor(col("x")).cast("int"), floor(col("y")).cast("int"), TileCells, HaloCells)
+      .groupBy("tc", "tr").as[(Int, Int), TilePt]
   }
 
   /** Per-cell reclassification summary: (col, row, n_points, n_ground,
     * zmin, opened_z). Gate-compact (one row per cell) while still pinning
     * every point's ground/object decision through n_ground. */
   def reclassify(pts: DataFrame): DataFrame = {
-    // clean feeds the min-surface aggregate AND the final classify join;
-    // (c, r, z) rows are 20 bytes each, so persisting beats re-deriving
-    // the synthetic point columns twice
-    val clean = graft.functions.CacheRegistry.share(
-      pts.filter(!col("classification").isin(7, 18))
-        .select(floor(col("x")).cast("int").as("c"),
-          floor(col("y")).cast("int").as("r"), col("z")))
-    // r14: with the own-marker neighborAgg each morphology stage
-    // consumes its input exactly once, so cells/eroded no longer need
-    // their defensive persists — the chain is a single linear lineage
-    val cells = clean.groupBy("c", "r").agg(min("z").as("zmin"))
-    val eroded = neighborAgg(cells, "zmin", doMin = true, "ez")
-    val opened = neighborAgg(eroded, "ez", doMin = false, "oz")
-    clean.join(opened.select("c", "r", "oz"), Seq("c", "r"))
-      .groupBy("c", "r")
-      .agg(count(lit(1)).as("n_points"),
-        sum(when(col("z") - col("oz") <= Threshold, 1L).otherwise(0L))
-          .as("n_ground"),
-        round(min("z"), 6).as("zmin"),
-        round(min("oz"), 6).as("opened_z"))
-      .select(col("c").as("col"), col("r").as("row"), col("n_points"),
-        col("n_ground"), col("zmin"), col("opened_z"))
+    import pts.sparkSession.implicits._
+    tiles(pts).flatMapGroups { (k: (Int, Int), it: Iterator[TilePt]) =>
+      new TileOpening(k._1, k._2, it).summary }
+      .toDF("col", "row", "n_points", "n_ground", "zmin", "opened_z")
+      .select(col("col"), col("row"), col("n_points"), col("n_ground"),
+        round(col("zmin"), 6).as("zmin"), round(col("opened_z"), 6).as("opened_z"))
   }
 
   /** Per-POINT ground selection — the composable form of [[reclassify]]
     * for pipelines that need the surviving points themselves (LAS bytes →
     * SMRF → DEM grid, the reference's differencing_functions.py:1672–1676
-    * keep-class-2 step): drop noise classes, build the same single-window
-    * opened min-surface, and return the (x, y, z) rows within Threshold
-    * of it. Same shapes and sharing discipline as [[reclassify]]. */
+    * keep-class-2 step): the (x, y, z) rows within Threshold of the
+    * opened surface, from the same kernel. */
   def groundPoints(pts: DataFrame): DataFrame = {
-    val tagged = graft.functions.CacheRegistry.share(
-      pts.filter(!col("classification").isin(7, 18))
-        .select(col("x"), col("y"), col("z"),
-          floor(col("x")).cast("int").as("c"),
-          floor(col("y")).cast("int").as("r")))
-    val cells = tagged.groupBy("c", "r").agg(min("z").as("zmin"))
-    val eroded = neighborAgg(cells, "zmin", doMin = true, "ez")
-    val opened = neighborAgg(eroded, "ez", doMin = false, "oz")
-    tagged.join(opened.select("c", "r", "oz"), Seq("c", "r"))
-      .filter(col("z") - col("oz") <= Threshold)
-      .select("x", "y", "z")
+    import pts.sparkSession.implicits._
+    tiles(pts).flatMapGroups { (k: (Int, Int), it: Iterator[TilePt]) =>
+      new TileOpening(k._1, k._2, it).groundPoints }
+      .toDF("x", "y", "z")
   }
 
   // ---- multi-window schedule (round 6) ---------------------------------
@@ -133,6 +189,8 @@ object Smrf {
   def et(k: Int, dh0: Double = Threshold, slope: Double = Slope,
          scalar: Double = Scalar, cell: Double = Cell): Double =
     dh0 + scalar * slope * k * cell
+
+  private val offsets = for (dc <- -1 to 1; dr <- -1 to 1) yield (dc, dr)
 
   /** One ring of min-inpaint: every bbox-clipped 3×3 neighbor of the
     * current domain gets the MIN of its existing neighbors; existing

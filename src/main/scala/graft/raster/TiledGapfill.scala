@@ -12,10 +12,9 @@ private[raster] case class TilePx(tc: Int, tr: Int, col: Int, row: Int, value: D
   *
   * The offset-explode form multiplies EVERY valid pixel by (2R+1)²−1
   * before the shuffle; fine for R=3, hopeless for a wide search radius at
-  * 100 TB. Here the grid is cut into `tile`×`tile` tiles, each valid pixel
-  * is shuffled to its home tile plus any of the ≤8 neighbor tiles whose
-  * R-halo contains it (only border pixels replicate — the pre-shuffle blowup
-  * is 1 + O(R/tile), not O(R²)), and a per-tile imperative kernel fills the
+  * 100 TB. Here each valid pixel is routed by [[HaloTile.route]] to its
+  * home `tile`×`tile` tile plus any neighbor tile whose R-halo contains it
+  * (only border pixels replicate), and a per-tile imperative kernel fills the
   * tile's missing cells from a dense local array. One shuffle on tile keys;
   * every task touches (tile+2R)² cells; tiles scale out embarrassingly.
   * This is the `mapPartitions`-kernel shape reserved for genuinely
@@ -30,9 +29,8 @@ object TiledGapfill {
 
   /** IDW gap-fill of the `w`×`w` grid's missing cells within Chebyshev
     * radius `maxDist`, executed tile-wise with an R-halo. Requires
-    * `maxDist <= tile` so ±1-tile replication covers the halo. */
-  def gapfillIdwTiled(px: DataFrame, w: Int, maxDist: Int, tile: Int = 32): DataFrame = {
-    require(maxDist <= tile, s"halo radius $maxDist must not exceed tile size $tile")
+    * `maxDist <= tile` (checked by [[HaloTile.route]]). */
+  def gapfillIdwTiled(px: DataFrame, w: Int, maxDist: Int, tile: Int): DataFrame = {
     val spark = px.sparkSession
     import spark.implicits._
     val T = tile
@@ -40,23 +38,9 @@ object TiledGapfill {
     val nt = (w + T - 1) / T
     val L = Terrain.lcmScale(R)
 
-    val offs = array((for (dtr <- -1 to 1; dtc <- -1 to 1)
-      yield struct(lit(dtc).as("dtc"), lit(dtr).as("dtr"))): _*)
-    val tagged = px
-      .select(col("col"), col("row"), col("value"),
-        floor(col("col") / T).cast("int").as("tc0"),
-        floor(col("row") / T).cast("int").as("tr0"),
-        explode(offs).as("o"))
-      .select((col("tc0") + col("o.dtc")).as("tc"),
-        (col("tr0") + col("o.dtr")).as("tr"),
-        col("col"), col("row"), col("value"))
+    val tagged = HaloTile.route(px.select("col", "row", "value"), col("col"), col("row"), T, R)
       .filter(col("tc") >= 0 && col("tc") < nt && col("tr") >= 0 && col("tr") < nt)
-      .filter(col("col") >= col("tc") * T - R &&
-        col("col") <= (col("tc") + 1) * T - 1 + R)
-      .filter(col("row") >= col("tr") * T - R &&
-        col("row") <= (col("tr") + 1) * T - 1 + R)
-      .select(col("tc").cast("int"), col("tr").cast("int"),
-        col("col").cast("int"), col("row").cast("int"),
+      .select(col("tc"), col("tr"), col("col").cast("int"), col("row").cast("int"),
         col("value").cast("double"))
       .as[TilePx]
 

@@ -185,4 +185,36 @@ class PlanQualitySpec extends SparkSuite {
       assert(stages(2L) == a, "seed changed the generated source")
     } finally spark.experimental.extraOptimizations = prev
   }
+
+  test("Smrf.groundPoints: one shuffle exchange, no cache, nothing registered") {
+    // the halo-tile kernel routes each point to its tiles in one exchange
+    // and consumes it once; the aggregate-and-join form persisted the
+    // points and shuffled per morphology stage
+    import spark.implicits._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case o => (o.children ++ o.subqueries).flatMap(nodes)
+    })
+    val pts = (0 until 3000).map { i =>
+      val k = graft.rng.Rand.mixLong(i.toLong, 77)
+      ((k % 90) - 45 + 0.5, ((k / 90) % 90) - 45 + 0.5, (k / 8100 % 100) / 10.0,
+        if (k % 13 == 0) 7 else 1)
+    }.toDF("x", "y", "z", "classification")
+    val registered = graft.functions.CacheRegistry.registered
+    val g = graft.ingest.Smrf.groundPoints(pts)
+    assert(g.collect().nonEmpty)
+    assert(graft.functions.CacheRegistry.registered == registered,
+      "groundPoints registered a shared frame")
+    val all = nodes(g.queryExecution.executedPlan)
+    val exchanges = all.count(_.isInstanceOf[ShuffleExchangeLike])
+    assert(exchanges == 1, s"expected one shuffle, found $exchanges:\n${all.head}")
+    assert(!all.exists(_.isInstanceOf[InMemoryTableScanExec]) &&
+      !g.queryExecution.withCachedData.toString.contains("InMemoryRelation"),
+      s"groundPoints must not read a cache:\n${all.head}")
+  }
 }
