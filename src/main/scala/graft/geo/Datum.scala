@@ -1,11 +1,16 @@
 package graft.geo
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
-/** Geodetic datum transformation math as codegen-friendly Columns — the
-  * engine analog of the reference's epoch-aware BOUNDCRS / PROJ datum
-  * path (differencing_functions.py:2066–2093), which SURVEY §2.2 left a
+/** Geodetic datum transformation math — the engine analog of the
+  * reference's epoch-aware BOUNDCRS / PROJ datum path
+  * (differencing_functions.py:2066–2093), which SURVEY §2.2 left a
   * pass-through concern until round 8. No UDFs, no native PROJ: the
   * classic geodesy chain (all public formulae)
   *
@@ -13,13 +18,26 @@ import org.apache.spark.sql.functions._
   *   7-parameter Helmert, position-vector convention (EPSG method 1033)
   *   geocentric → geodetic (Bowring 1976 non-iterative inverse)
   *
-  * runs inside whole-stage codegen exactly like [[Proj]]. Like the UTM
-  * gate, the oracle for the full transform is a PINNED artifact computed
-  * by an independent numpy-longdouble evaluation
+  * Each step is written once, as a scalar function on doubles
+  * ([[Step]]), and a chain of steps runs as native [[DatumShift]]
+  * Catalyst nodes, one per output coordinate, inside whole-stage codegen.
+  * It is not Column arithmetic because that form does not compose: the
+  * inverse reuses `p` 7 times, `theta` 6 and `phi` 3, and the forward
+  * reuses `lat` 3 times per output, so one shift spelled as Columns holds
+  * 2,876 / 162 / 8,962 nodes (lat, lon, h) once the analyzer copies every
+  * shared subterm out, and a second shift applied to those Columns in
+  * the same projection holds ~1.9 M / 0.1 M / 5.8 M — the analyzer never
+  * finishes resolving it and exhausts the heap. As nodes, each input
+  * column is read once and a chained shift is a few dozen nodes.
+  *
+  * Like the UTM gate, the oracle for the full transform is a PINNED
+  * artifact computed by an independent numpy-longdouble evaluation
   * (tools/gen_helmert_expected.py) — a foreign engine cannot hash-match
   * a transcendental chain at the ulp level, and the canonical rounding
   * of both sides agrees unless the engine drifts beyond its ~1e-9
-  * accuracy budget (DatumSpec pins round trips and magnitudes).
+  * accuracy budget (DatumSpec pins round trips and magnitudes). The
+  * steps keep the operation order of the Column form the artifacts were
+  * gated against, including Spark's `atan2(y + 0.0, x + 0.0)`.
   */
 object Datum {
 
@@ -29,6 +47,8 @@ object Datum {
   val Grs80: Ellipsoid = (6378137.0, 298.257222101)
   val Airy1830: Ellipsoid = (6377563.396, 299.3249646)
   val Intl1924: Ellipsoid = (6378388.0, 297.0)
+
+  private val Sec2Rad = math.Pi / (180.0 * 3600.0)
 
   /** 7 Helmert parameters: translations [m], rotations [arc-sec],
     * scale [ppm] — position-vector sign convention. */
@@ -76,102 +96,175 @@ object Datum {
     0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0,
     0.0, 0.0, 0.0, 1.50379e-3, 1.18346e-3, 1.20716e-3, 0.0, 2020.0)
 
-  /** Position-vector Helmert with COLUMN-valued parameters — the
-    * per-row-epoch path of [[transform14]]; same expression order as
-    * the scalar [[helmert]], all inside whole-stage codegen. */
-  def helmertCols(x: Column, y: Column, z: Column,
-                  tx: Column, ty: Column, tz: Column,
-                  rx: Column, ry: Column, rz: Column,
-                  s: Column): (Column, Column, Column) =
-    (tx + s * (x - rz * y + ry * z),
-      ty + s * (rz * x + y - rx * z),
-      tz + s * (-ry * x + rx * y + z))
+  /** One step of a datum chain: rewrites the coordinate triple `v` in
+    * place (the row's epoch is read only by [[Shift14]]). */
+  sealed trait Step extends Serializable {
+    def apply(v: Array[Double], epoch: Double): Unit
+  }
 
-  /** Full time-dependent datum shift with a PER-ROW epoch column:
-    * geodetic on `src` → 14-parameter Helmert materialized at each
-    * row's epoch → geodetic on `dst`. The parameter propagation is
-    * p0 + rate·Δt, Δt = epoch − refEpoch, with one fixed expression
-    * order. NOTE: the pinned-artifact generator multiplies
-    * (rate·sec2rad)·Δt where this chain computes (rate·Δt)·sec2rad —
+  /** Geodetic (degrees, metres) → geocentric XYZ on `ell`. */
+  final case class Geocentric(ell: Ellipsoid) extends Step {
+    private val (a, invF) = ell
+    private val e2 = { val f = 1.0 / invF; f * (2.0 - f) }
+    def apply(v: Array[Double], epoch: Double): Unit = {
+      val phi = math.toRadians(v(0))
+      val lam = math.toRadians(v(1))
+      val h = v(2)
+      val sinp = math.sin(phi)
+      val cosp = math.cos(phi)
+      val nu = a / math.sqrt(1.0 - e2 * sinp * sinp)
+      v(0) = (nu + h) * cosp * math.cos(lam)
+      v(1) = (nu + h) * cosp * math.sin(lam)
+      v(2) = (nu * (1.0 - e2) + h) * sinp
+    }
+  }
+
+  /** Position-vector Helmert on geocentric coordinates:
+    * X' = T + s·(I + R)·X with s = 1 + ppm·1e-6 and the small-angle
+    * rotation matrix [[1, −rz, ry], [rz, 1, −rx], [−ry, rx, 1]]
+    * (rotations in radians). */
+  private def helmert(v: Array[Double], tx: Double, ty: Double, tz: Double,
+                      rx: Double, ry: Double, rz: Double, s: Double): Unit = {
+    val x = v(0); val y = v(1); val z = v(2)
+    v(0) = tx + s * (x - rz * y + ry * z)
+    v(1) = ty + s * (rz * x + y - rx * z)
+    v(2) = tz + s * (-ry * x + rx * y + z)
+  }
+
+  /** The 7-parameter Helmert `p`. */
+  final case class Shift7(p: Helmert) extends Step {
+    private val rx = p.rxSec * Sec2Rad
+    private val ry = p.rySec * Sec2Rad
+    private val rz = p.rzSec * Sec2Rad
+    private val s = 1.0 + p.sPpm * 1e-6
+    def apply(v: Array[Double], epoch: Double): Unit =
+      helmert(v, p.tx, p.ty, p.tz, rx, ry, rz, s)
+  }
+
+  /** The 14-parameter Helmert `p` materialized at the row's epoch:
+    * p0 + rate·Δt, Δt = epoch − refEpoch, rotations as (rate·Δt)·sec2rad.
+    * NOTE: the pinned-artifact generator multiplies (rate·sec2rad)·Δt —
     * the match at the artifact's 8-dp rounding rests on the generator's
     * longdouble headroom absorbing f64 reorder differences (the same
     * tolerance argument as the helmert_expected pattern), not on
     * verbatim op-order mirroring. */
-  def transform14(lat: Column, lon: Column, h: Column, epoch: Column,
-                  src: Ellipsoid, p: Helmert14, dst: Ellipsoid)
-      : (Column, Column, Column) = {
-    val sec2rad = math.Pi / (180.0 * 3600.0)
-    val dt = epoch - lit(p.refEpoch)
-    val tx = lit(p.tx) + lit(p.dtx) * dt
-    val ty = lit(p.ty) + lit(p.dty) * dt
-    val tz = lit(p.tz) + lit(p.dtz) * dt
-    val rx = (lit(p.rxSec) + lit(p.drxSec) * dt) * lit(sec2rad)
-    val ry = (lit(p.rySec) + lit(p.drySec) * dt) * lit(sec2rad)
-    val rz = (lit(p.rzSec) + lit(p.drzSec) * dt) * lit(sec2rad)
-    val s = lit(1.0) + (lit(p.sPpm) + lit(p.dsPpm) * dt) * lit(1e-6)
-    val (x, y, z) = toGeocentric(lat, lon, h, src)
-    val (x2, y2, z2) = helmertCols(x, y, z, tx, ty, tz, rx, ry, rz, s)
-    toGeodetic(x2, y2, z2, dst)
+  final case class Shift14(p: Helmert14) extends Step {
+    def apply(v: Array[Double], epoch: Double): Unit = {
+      val dt = epoch - p.refEpoch
+      helmert(v, p.tx + p.dtx * dt, p.ty + p.dty * dt, p.tz + p.dtz * dt,
+        (p.rxSec + p.drxSec * dt) * Sec2Rad,
+        (p.rySec + p.drySec * dt) * Sec2Rad,
+        (p.rzSec + p.drzSec * dt) * Sec2Rad,
+        1.0 + (p.sPpm + p.dsPpm * dt) * 1e-6)
+    }
+  }
+
+  /** Geocentric XYZ → geodetic (degrees, metres) on `ell` via Bowring's
+    * non-iterative inverse (1976) — sub-µm for |h| < 10 km. `atan2`
+    * adds 0.0 to both arguments, as Spark's does, so −0.0 reads as 0.0. */
+  final case class Geodetic(ell: Ellipsoid) extends Step {
+    private val (a, invF) = ell
+    private val f = 1.0 / invF
+    private val e2 = f * (2.0 - f)
+    private val b = a * (1.0 - f)
+    private val ep2b = e2 / (1.0 - e2) * b
+    private val e2a = e2 * a
+    def apply(v: Array[Double], epoch: Double): Unit = {
+      val x = v(0); val y = v(1); val z = v(2)
+      val p = math.sqrt(x * x + y * y)
+      val theta = math.atan2(z * a + 0.0, p * b + 0.0)
+      val st = math.sin(theta)
+      val ct = math.cos(theta)
+      val phi = math.atan2(z + ep2b * st * st * st + 0.0,
+        p - e2a * ct * ct * ct + 0.0)
+      val sinp = math.sin(phi)
+      val nu = a / math.sqrt(1.0 - e2 * sinp * sinp)
+      v(0) = math.toDegrees(phi)
+      v(1) = math.toDegrees(math.atan2(y + 0.0, x + 0.0))
+      v(2) = p / math.cos(phi) - nu
+    }
+  }
+
+  /** The three output coordinates of `steps` run over (a, b, c[, epoch]),
+    * each a [[DatumShift]] node; inputs are cast to double. */
+  private def chain(in: Seq[Column], steps: Step*): (Column, Column, Column) = {
+    val kids = in.map(c => toExpr(c.cast("double")))
+    def out(i: Int) = toCol(DatumShift(kids, steps, i))
+    (out(0), out(1), out(2))
   }
 
   /** Geodetic (degrees, metres) → geocentric XYZ on `ell`. */
   def toGeocentric(lat: Column, lon: Column, h: Column,
-                   ell: Ellipsoid): (Column, Column, Column) = {
-    val (a, invF) = ell
-    val f = 1.0 / invF
-    val e2 = f * (2.0 - f)
-    val phi = radians(lat)
-    val lam = radians(lon)
-    val sinp = sin(phi)
-    val cosp = cos(phi)
-    val nu = lit(a) / sqrt(lit(1.0) - lit(e2) * sinp * sinp)
-    ((nu + h) * cosp * cos(lam),
-      (nu + h) * cosp * sin(lam),
-      (nu * lit(1.0 - e2) + h) * sinp)
-  }
+                   ell: Ellipsoid): (Column, Column, Column) =
+    chain(Seq(lat, lon, h), Geocentric(ell))
 
-  /** Position-vector Helmert on geocentric coordinates:
-    * X' = T + (1 + s)·(I + R)·X with the small-angle rotation matrix
-    * [[1, −rz, ry], [rz, 1, −rx], [−ry, rx, 1]]. */
-  def helmert(x: Column, y: Column, z: Column,
-              p: Helmert): (Column, Column, Column) = {
-    val sec2rad = math.Pi / (180.0 * 3600.0)
-    val rx = p.rxSec * sec2rad
-    val ry = p.rySec * sec2rad
-    val rz = p.rzSec * sec2rad
-    val s = 1.0 + p.sPpm * 1e-6
-    (lit(p.tx) + lit(s) * (x - lit(rz) * y + lit(ry) * z),
-      lit(p.ty) + lit(s) * (lit(rz) * x + y - lit(rx) * z),
-      lit(p.tz) + lit(s) * (lit(-ry) * x + lit(rx) * y + z))
-  }
-
-  /** Geocentric XYZ → geodetic (degrees, metres) on `ell` via Bowring's
-    * non-iterative inverse (1976) — sub-µm for |h| < 10 km. */
+  /** Geocentric XYZ → geodetic (degrees, metres) on `ell`. */
   def toGeodetic(x: Column, y: Column, z: Column,
-                 ell: Ellipsoid): (Column, Column, Column) = {
-    val (a, invF) = ell
-    val f = 1.0 / invF
-    val e2 = f * (2.0 - f)
-    val b = a * (1.0 - f)
-    val ep2 = e2 / (1.0 - e2)
-    val p = sqrt(x * x + y * y)
-    val theta = atan2(z * lit(a), p * lit(b))
-    val st = sin(theta)
-    val ct = cos(theta)
-    val phi = atan2(z + lit(ep2 * b) * st * st * st,
-      p - lit(e2 * a) * ct * ct * ct)
-    val sinp = sin(phi)
-    val nu = lit(a) / sqrt(lit(1.0) - lit(e2) * sinp * sinp)
-    (degrees(phi), degrees(atan2(y, x)), p / cos(phi) - nu)
-  }
+                 ell: Ellipsoid): (Column, Column, Column) =
+    chain(Seq(x, y, z), Geodetic(ell))
 
   /** Full datum shift: geodetic on `src` ellipsoid → Helmert `p` →
     * geodetic on `dst` ellipsoid. */
   def transform(lat: Column, lon: Column, h: Column,
                 src: Ellipsoid, p: Helmert, dst: Ellipsoid)
-      : (Column, Column, Column) = {
-    val (x, y, z) = toGeocentric(lat, lon, h, src)
-    val (x2, y2, z2) = helmert(x, y, z, p)
-    toGeodetic(x2, y2, z2, dst)
+      : (Column, Column, Column) =
+    chain(Seq(lat, lon, h), Geocentric(src), Shift7(p), Geodetic(dst))
+
+  /** Full time-dependent datum shift with a PER-ROW epoch column:
+    * geodetic on `src` → 14-parameter Helmert materialized at each
+    * row's epoch → geodetic on `dst`. */
+  def transform14(lat: Column, lon: Column, h: Column, epoch: Column,
+                  src: Ellipsoid, p: Helmert14, dst: Ellipsoid)
+      : (Column, Column, Column) =
+    chain(Seq(lat, lon, h, epoch), Geocentric(src), Shift14(p), Geodetic(dst))
+}
+
+/** Output coordinate `coord` (0, 1 or 2) of the datum chain `steps` over
+  * the double inputs (a, b, c[, epoch]); null if any input is null.
+  * `eval` and the generated code both call [[value]], so the interpreted
+  * and compiled paths run the same scalar steps; the steps are bound by
+  * reference, so every chain generates the same source. Each coordinate
+  * runs the whole chain, so projecting all three runs it three times. */
+case class DatumShift(children: Seq[Expression], steps: Seq[Datum.Step], coord: Int)
+    extends Expression {
+  require(children.length == 3 || children.length == 4, "datum chain takes (a, b, c[, epoch])")
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = children.exists(_.nullable)
+  override def prettyName: String = "datum"
+  override def sql: String =
+    s"$prettyName(${children.map(_.sql).mkString(", ")})[$coord]"
+
+  def value(a: Double, b: Double, c: Double, epoch: Double): Double = {
+    val v = Array(a, b, c)
+    steps.foreach(_(v, epoch))
+    v(coord)
   }
+
+  override def eval(row: InternalRow): Any = {
+    val in = children.map(_.eval(row))
+    if (in.contains(null)) null
+    else {
+      val d = in.map(_.asInstanceOf[Double])
+      value(d(0), d(1), d(2), if (d.length == 4) d(3) else Double.NaN)
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val in = children.map(_.genCode(ctx))
+    val ref = ctx.addReferenceObj("datum", this)
+    val args = (in.map(_.value.toString) ++ Seq("java.lang.Double.NaN")).take(4)
+    val call = s"$ref.value(${args.mkString(", ")})"
+    val inputs = in.map(_.code).reduce(_ + _)
+    if (!nullable) ev.copy(code = code"""
+      $inputs
+      double ${ev.value} = $call;""", isNull = FalseLiteral)
+    else ev.copy(code = code"""
+      $inputs
+      boolean ${ev.isNull} = ${in.map(_.isNull.toString).mkString(" || ")};
+      double ${ev.value} = ${ev.isNull} ? 0.0 : $call;""")
+  }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(children = c)
 }

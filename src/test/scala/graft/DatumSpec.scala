@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.functions._
-import graft.geo.Datum
+import org.apache.spark.sql.graft.ColumnTrees
+import org.apache.spark.sql.types.DoubleType
+import graft.geo.{Datum, DatumShift}
 
 class DatumSpec extends SparkSuite {
   import spark.implicits._
@@ -146,5 +151,73 @@ class DatumSpec extends SparkSuite {
       .collect().map(r => r.getLong(0) ->
         (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
     assert(got == exp)
+  }
+
+  test("forward then inverse shift chained in one projection is a small tree") {
+    // spelled as Column arithmetic, one shift copied each shared subterm
+    // per use (~12 k nodes) and a chained second shift ~7.8 M: the
+    // analyzer never finished resolving it and exhausted the heap
+    val p = Datum.Osgb36ToWgs84
+    val (f1, f2, f3) = Datum.transform(col("lat"), col("lon"), col("h"),
+      Datum.Airy1830, p, Datum.Wgs84)
+    val q = Datum.Itrf2014ToGda2020
+    val (g1, g2, g3) = Datum.transform14(col("lat"), col("lon"), col("h"),
+      col("epoch"), Datum.Grs80, q, Datum.Grs80)
+    val chains = Seq(
+      "transform" -> Datum.transform(f1, f2, f3, Datum.Wgs84, p.inverse, Datum.Airy1830),
+      "transform14" -> Datum.transform14(g1, g2, g3, col("epoch"), Datum.Grs80,
+        q.inverse, Datum.Grs80))
+    val df = Seq((-27.5, 153.0, 40.0, 2010.0), (-10.0, 154.0, 950.0, 2024.9375))
+      .toDF("lat", "lon", "h", "epoch")
+    for ((name, (a, b, c)) <- chains) {
+      val built = Seq(a, b, c).map(ColumnTrees.nodes(_, 1000)).sum
+      assert(built < 1000, s"$name: $built nodes as built")
+      val rt = df.select(col("lat"), col("lon"), a.as("a"), b.as("b"), c.as("c"))
+      val analyzed = rt.queryExecution.analyzed.expressions
+        .map(_.collect { case e => e }.size).sum
+      assert(analyzed < 1000, s"$name: $analyzed nodes after analysis")
+      rt.collect().foreach { r =>
+        assert(math.abs(r.getDouble(2) - r.getDouble(0)) < 1e-7 &&
+          math.abs(r.getDouble(3) - r.getDouble(1)) < 1e-7, s"$name round trip: $r")
+      }
+    }
+  }
+
+  test("DatumShift: interpreted eval equals codegen; a null input gives null") {
+    val in = (0 until 4).map(BoundReference(_, DoubleType, nullable = true))
+    val chains = Seq(
+      Seq(Datum.Geocentric(Datum.Airy1830), Datum.Shift7(Datum.Osgb36ToWgs84),
+        Datum.Geodetic(Datum.Wgs84)),
+      Seq(Datum.Geocentric(Datum.Grs80), Datum.Shift14(Datum.Itrf2014ToGda2020),
+        Datum.Geodetic(Datum.Grs80)),
+      Seq(Datum.Geocentric(Datum.Wgs84), Datum.Geodetic(Datum.Wgs84)))
+    val pts = Seq((51.5, -0.1, 45.0, 2010.0), (-33.86, 151.21, 10.0, 2017.25),
+      (0.0, 0.0, 0.0, 2020.0), (89.0, 179.0, 8000.0, 2024.9375),
+      (-89.0, -179.0, -100.0, 2015.0), (90.0, -180.0, 0.0, 2020.0))
+    for (steps <- chains) {
+      val kids = if (steps.exists(_.isInstanceOf[Datum.Shift14])) in else in.take(3)
+      val es = (0 until 3).map(DatumShift(kids, steps, _))
+      val gen = GenerateUnsafeProjection.generate(es)
+      for ((a, b, c, t) <- pts) {
+        val row = InternalRow(a, b, c, t)
+        val out = gen(row)
+        es.zipWithIndex.foreach { case (e, i) =>
+          assert(e.eval(row) == out.getDouble(i), s"$steps coord $i at $row")
+        }
+      }
+      for (k <- kids.indices) {
+        val row = InternalRow.fromSeq(Seq[Any](51.5, -0.1, 45.0, 2010.0).updated(k, null))
+        val out = gen(row)
+        es.zipWithIndex.foreach { case (e, i) =>
+          assert(e.eval(row) == null && out.isNullAt(i), s"$steps coord $i, null input $k")
+        }
+      }
+    }
+    val nulls = Seq[(Option[Double], Double, Double)]((None, 1.0, 2.0), (Some(51.5), -0.1, 45.0))
+      .toDF("lat", "lon", "h")
+    val (la, _, _) = Datum.transform(col("lat"), col("lon"), col("h"),
+      Datum.Airy1830, Datum.Osgb36ToWgs84, Datum.Wgs84)
+    val got = nulls.select(la).as[Option[Double]].collect()
+    assert(got(0).isEmpty && got(1).isDefined)
   }
 }
