@@ -7,17 +7,26 @@ import graft.raster.GridMeta
 
 /** Minimal PURE-JVM GeoTIFF codec for the engine's raster byte boundary —
   * the reference hands this to rioxarray/GDAL (`differencing_functions.py:
-  * 69–79`); here a self-contained reader/writer covers the uncompressed
-  * single-band float case so ingest can start from actual raster bytes
-  * with no native dependency.
+  * 69–79`, and writes LZW tiled COPY_SRC_OVERVIEWS rasters, :696–705);
+  * here a self-contained reader/writer covers the single-band float case
+  * so ingest can start from actual raster bytes with no native
+  * dependency.
   *
   * Scope (validated, everything else rejected loudly):
-  *   - classic TIFF, II or MM byte order (writer emits II)
-  *   - one sample per pixel, IEEE float 32 or 64 (writer emits 64)
-  *   - Compression=1 (none), 5 (LZW, [[Lzw]]) or 8 (Deflate/zlib,
-  *     [[Zlib]] — GDAL "compress=DEFLATE"); strip- or tile-organized
+  *   - classic TIFF or BigTIFF (magic 43, u64 offsets), II or MM byte
+  *     order (writer emits II)
+  *   - one sample per pixel, IEEE float 32 or 64
+  *   - Compression=1 (none), 5 (LZW, [[Lzw]]), 8 (Deflate/zlib,
+  *     [[Zlib]] — GDAL "compress=DEFLATE") or 32773 ([[PackBits]]),
+  *     optionally with Predictor=3 ([[FpPredictor]]); strip- or
+  *     tile-organized
+  *   - overview pyramids: a next-IFD chain of downsampled pages
   *   - geo tags: ModelPixelScale (33550), ModelTiepoint (33922),
   *     GDAL_NODATA (42113) → [[GridMeta]] origin/scale/nodata
+  *
+  * One private page-chain writer produces every variant; the public
+  * `encode*` methods only choose its compression, predictor, BigTIFF
+  * widths and overview levels.
   *
   * The byte codec is deliberately per-tile and driver-free: `decode`/
   * `encode` are pure functions over byte arrays, so a 100-TB ingest is a
@@ -344,113 +353,11 @@ object GeoTiff {
     * switches from one-strip-per-row to the tile-organized layout
     * (TIFF tiles; dims must be multiples of 16, edge tiles padded with
     * the nodata sentinel). Default args reproduce the original strip/f64
-    * bytes exactly - the oracle round-trip query is the regression gate. */
+    * bytes exactly. The oracle round-trip queries gate the pixels; the
+    * byte pin in `GeoTiffSpec` gates the bytes of every writer. */
   def encode(meta: GridMeta, rows: Array[Array[Double]], bits: Int,
-             tile: Option[(Int, Int)]): Array[Byte] = {
-    val w = meta.width
-    val h = meta.height
-    require(rows.length == h, s"expected $h rows, got ${rows.length}")
-    rows.foreach(r => require(r.length == w, s"expected $w cols, got ${r.length}"))
-    require(bits == 32 || bits == 64, s"bits must be 32 or 64, got $bits")
-    tile.foreach { case (tw, th) =>
-      require(tw > 0 && th > 0 && tw % 16 == 0 && th % 16 == 0,
-        s"TIFF tile dims must be positive multiples of 16, got ${tw}x$th") }
-    val px = bits / 8
-    val nodataStr = {
-      // GDAL writes the sentinel as ASCII; keep it round-trip exact
-      val s = if (meta.nodata == meta.nodata.toLong.toDouble)
-        meta.nodata.toLong.toString else meta.nodata.toString
-      s + " "
-    }
-    // chunk geometry: strips are one row each; tiles are tw*th row-major
-    val (nChunks, chunkSize) = tile match {
-      case None => (h, px * w)
-      case Some((tw, th)) => (((w + tw - 1) / tw) * ((h + th - 1) / th), px * tw * th)
-    }
-    val entries = if (tile.isEmpty) 13 else 14
-    val header = 8
-    val ifdSize = 2 + entries * 12 + 4
-    val ifdOff = header
-    var cursor = ifdOff + ifdSize
-    val chunkOffsetsOff = cursor; cursor += 4 * nChunks
-    val chunkCountsOff = cursor; cursor += 4 * nChunks
-    val scaleOff = cursor; cursor += 8 * 3
-    val tieOff = cursor; cursor += 8 * 6
-    val nodataOff = cursor; cursor += nodataStr.length
-    cursor = (cursor + 1) & ~1 // word-align pixel data
-    val dataOff = cursor
-    val total = dataOff + chunkSize * nChunks
-    val b = ByteBuffer.allocate(total).order(ByteOrder.LITTLE_ENDIAN)
-
-    b.put('I'.toByte).put('I'.toByte).putShort(42).putInt(ifdOff)
-    b.position(ifdOff)
-    b.putShort(entries.toShort)
-    def entry(tag: Int, typ: Int, count: Int)(writeValue: ByteBuffer => Unit): Unit = {
-      b.putShort(tag.toShort).putShort(typ.toShort).putInt(count)
-      val p = b.position()
-      writeValue(b)
-      b.position(p + 4)
-    }
-    // LONG-array entries read inline when count == 1 (cnt*4 <= 4), so a
-    // single-chunk file must carry the value itself, not a pointer
-    def offsetsEntry(tag: Int, valueAt: Int, inlineVal: Int): Unit =
-      entry(tag, 4, nChunks)(_.putInt(if (nChunks == 1) inlineVal else valueAt))
-    entry(TAG_WIDTH, 4, 1)(_.putInt(w))
-    entry(TAG_HEIGHT, 4, 1)(_.putInt(h))
-    entry(TAG_BITS, 3, 1)(_.putShort(bits.toShort))
-    entry(TAG_COMPRESSION, 3, 1)(_.putShort(1))
-    entry(TAG_PHOTOMETRIC, 3, 1)(_.putShort(1))
-    tile match {
-      case None =>
-        offsetsEntry(TAG_STRIP_OFFSETS, chunkOffsetsOff, dataOff)
-        entry(TAG_SAMPLES_PER_PX, 3, 1)(_.putShort(1))
-        entry(TAG_ROWS_PER_STRIP, 4, 1)(_.putInt(1))
-        offsetsEntry(TAG_STRIP_COUNTS, chunkCountsOff, chunkSize)
-        entry(TAG_SAMPLE_FORMAT, 3, 1)(_.putShort(3))
-      case Some((tw, th)) => // ascending tag order: 277,322..325,339
-        entry(TAG_SAMPLES_PER_PX, 3, 1)(_.putShort(1))
-        entry(TAG_TILE_WIDTH, 3, 1)(_.putShort(tw.toShort))
-        entry(TAG_TILE_LENGTH, 3, 1)(_.putShort(th.toShort))
-        offsetsEntry(TAG_TILE_OFFSETS, chunkOffsetsOff, dataOff)
-        offsetsEntry(TAG_TILE_COUNTS, chunkCountsOff, chunkSize)
-        entry(TAG_SAMPLE_FORMAT, 3, 1)(_.putShort(3))
-    }
-    entry(TAG_PIXEL_SCALE, 12, 3)(_.putInt(scaleOff))
-    entry(TAG_TIEPOINT, 12, 6)(_.putInt(tieOff))
-    // ASCII values of <= 4 bytes are INLINE per the TIFF spec (readers,
-    // ours included, treat them so) — short sentinels like "-1 " must
-    // carry their bytes, not a pointer
-    entry(TAG_GDAL_NODATA, 2, nodataStr.length)(bb =>
-      if (nodataStr.length <= 4) bb.put(nodataStr.getBytes("US-ASCII"))
-      else bb.putInt(nodataOff))
-    b.putInt(0) // no next IFD
-
-    b.position(chunkOffsetsOff)
-    for (t <- 0 until nChunks) b.putInt(dataOff + chunkSize * t)
-    b.position(chunkCountsOff)
-    for (_ <- 0 until nChunks) b.putInt(chunkSize)
-    b.position(scaleOff)
-    b.putDouble(meta.dx).putDouble(meta.dy).putDouble(0.0)
-    b.position(tieOff)
-    b.putDouble(0.0).putDouble(0.0).putDouble(0.0)
-    b.putDouble(meta.originX).putDouble(meta.originY).putDouble(0.0)
-    b.position(nodataOff)
-    b.put(nodataStr.getBytes("US-ASCII"))
-    b.position(dataOff)
-    def put(v: Double): Unit =
-      if (px == 8) { b.putDouble(v); () } else { b.putFloat(v.toFloat); () }
-    tile match {
-      case None => rows.foreach(_.foreach(put))
-      case Some((tw, th)) =>
-        val across = (w + tw - 1) / tw
-        for (t <- 0 until nChunks; r <- 0 until th; c <- 0 until tw) {
-          val gr = (t / across) * th + r
-          val gc = (t % across) * tw + c
-          put(if (gr < h && gc < w) rows(gr)(gc) else meta.nodata)
-        }
-    }
-    b.array()
-  }
+             tile: Option[(Int, Int)]): Array[Byte] =
+    write(meta, rows, bits, tile)
 
   /** BigTIFF writer (magic 43, u64 offsets everywhere — what GDAL emits
     * with `BIGTIFF=YES` or automatically past 4 GiB; TIFF tags and chunk
@@ -461,107 +368,8 @@ object GeoTiff {
     * the format's u64 offsets are the point — a 100-TB pipeline's
     * mosaics exceed classic TIFF's 4 GiB addressing. */
   def encodeBig(meta: GridMeta, rows: Array[Array[Double]], bits: Int,
-                tile: Option[(Int, Int)]): Array[Byte] = {
-    val w = meta.width
-    val h = meta.height
-    require(rows.length == h, s"expected $h rows, got ${rows.length}")
-    rows.foreach(r => require(r.length == w, s"expected $w cols, got ${r.length}"))
-    require(bits == 32 || bits == 64, s"bits must be 32 or 64, got $bits")
-    tile.foreach { case (tw, th) =>
-      require(tw > 0 && th > 0 && tw % 16 == 0 && th % 16 == 0,
-        s"TIFF tile dims must be positive multiples of 16, got ${tw}x$th") }
-    val px = bits / 8
-    val nodataStr = {
-      val s = if (meta.nodata == meta.nodata.toLong.toDouble)
-        meta.nodata.toLong.toString else meta.nodata.toString
-      s + " "
-    }
-    val (nChunks, chunkSize) = tile match {
-      case None => (h, px * w)
-      case Some((tw, th)) => (((w + tw - 1) / tw) * ((h + th - 1) / th), px * tw * th)
-    }
-    val entries = if (tile.isEmpty) 13 else 14
-    val header = 16
-    val ifdOff = header
-    var cursor = ifdOff + 8 + entries * 20 + 8
-    val chunkOffsetsOff = cursor; cursor += 8 * nChunks
-    val chunkCountsOff = cursor; cursor += 8 * nChunks
-    val scaleOff = cursor; cursor += 8 * 3
-    val tieOff = cursor; cursor += 8 * 6
-    val nodataOff = cursor; cursor += nodataStr.length
-    cursor = (cursor + 1) & ~1
-    val dataOff = cursor
-    val total = dataOff + chunkSize * nChunks
-    val b = ByteBuffer.allocate(total).order(ByteOrder.LITTLE_ENDIAN)
-
-    b.put('I'.toByte).put('I'.toByte).putShort(43)
-    b.putShort(8).putShort(0) // offset size, reserved
-    b.putLong(ifdOff.toLong)
-    b.position(ifdOff)
-    b.putLong(entries.toLong)
-    def entry(tag: Int, typ: Int, count: Long)(writeValue: ByteBuffer => Unit): Unit = {
-      b.putShort(tag.toShort).putShort(typ.toShort).putLong(count)
-      val p = b.position()
-      writeValue(b)
-      b.position(p + 8)
-    }
-    // LONG8 arrays inline when count == 1 (8 bytes fit the value field)
-    def offsetsEntry(tag: Int, valueAt: Int, inlineVal: Long): Unit =
-      entry(tag, 16, nChunks.toLong)(bb =>
-        bb.putLong(if (nChunks == 1) inlineVal else valueAt.toLong))
-    entry(TAG_WIDTH, 4, 1)(_.putInt(w))
-    entry(TAG_HEIGHT, 4, 1)(_.putInt(h))
-    entry(TAG_BITS, 3, 1)(_.putShort(bits.toShort))
-    entry(TAG_COMPRESSION, 3, 1)(_.putShort(1))
-    entry(TAG_PHOTOMETRIC, 3, 1)(_.putShort(1))
-    tile match {
-      case None =>
-        offsetsEntry(TAG_STRIP_OFFSETS, chunkOffsetsOff, dataOff.toLong)
-        entry(TAG_SAMPLES_PER_PX, 3, 1)(_.putShort(1))
-        entry(TAG_ROWS_PER_STRIP, 4, 1)(_.putInt(1))
-        offsetsEntry(TAG_STRIP_COUNTS, chunkCountsOff, chunkSize.toLong)
-        entry(TAG_SAMPLE_FORMAT, 3, 1)(_.putShort(3))
-      case Some((tw, th)) =>
-        entry(TAG_SAMPLES_PER_PX, 3, 1)(_.putShort(1))
-        entry(TAG_TILE_WIDTH, 3, 1)(_.putShort(tw.toShort))
-        entry(TAG_TILE_LENGTH, 3, 1)(_.putShort(th.toShort))
-        offsetsEntry(TAG_TILE_OFFSETS, chunkOffsetsOff, dataOff.toLong)
-        offsetsEntry(TAG_TILE_COUNTS, chunkCountsOff, chunkSize.toLong)
-        entry(TAG_SAMPLE_FORMAT, 3, 1)(_.putShort(3))
-    }
-    entry(TAG_PIXEL_SCALE, 12, 3)(_.putLong(scaleOff.toLong))
-    entry(TAG_TIEPOINT, 12, 6)(_.putLong(tieOff.toLong))
-    entry(TAG_GDAL_NODATA, 2, nodataStr.length.toLong)(bb =>
-      if (nodataStr.length <= 8) bb.put(nodataStr.getBytes("US-ASCII"))
-      else bb.putLong(nodataOff.toLong))
-    b.putLong(0L) // no next IFD
-
-    b.position(chunkOffsetsOff)
-    for (t <- 0 until nChunks) b.putLong(dataOff.toLong + chunkSize.toLong * t)
-    b.position(chunkCountsOff)
-    for (_ <- 0 until nChunks) b.putLong(chunkSize.toLong)
-    b.position(scaleOff)
-    b.putDouble(meta.dx).putDouble(meta.dy).putDouble(0.0)
-    b.position(tieOff)
-    b.putDouble(0.0).putDouble(0.0).putDouble(0.0)
-    b.putDouble(meta.originX).putDouble(meta.originY).putDouble(0.0)
-    b.position(nodataOff)
-    b.put(nodataStr.getBytes("US-ASCII"))
-    b.position(dataOff)
-    def put(v: Double): Unit =
-      if (px == 8) { b.putDouble(v); () } else { b.putFloat(v.toFloat); () }
-    tile match {
-      case None => rows.foreach(_.foreach(put))
-      case Some((tw, th)) =>
-        val across = (w + tw - 1) / tw
-        for (t <- 0 until nChunks; r <- 0 until th; c <- 0 until tw) {
-          val gr = (t / across) * th + r
-          val gc = (t % across) * tw + c
-          put(if (gr < h && gc < w) rows(gr)(gc) else meta.nodata)
-        }
-    }
-    b.array()
-  }
+                tile: Option[(Int, Int)]): Array[Byte] =
+    write(meta, rows, bits, tile, big = true)
 
   /** LZW writer (Compression=5, the variant GDAL emits for the
     * reference's compressed rasters — differencing_functions.py:696–705):
@@ -571,7 +379,7 @@ object GeoTiff {
     * gates the codec end to end. */
   def encodeLzw(meta: GridMeta, rows: Array[Array[Double]], bits: Int,
                 tile: Option[(Int, Int)]): Array[Byte] =
-    encodeCompressed(meta, rows, bits, tile, 5, Lzw.encode)
+    write(meta, rows, bits, tile, 5, Lzw.encode)
 
   /** Deflate writer (Compression=8, GDAL "compress=DEFLATE" — the other
     * compression the reference's GDAL stack round-trips): identical
@@ -579,7 +387,7 @@ object GeoTiff {
     * [[decode]] reads all three compressions. */
   def encodeDeflate(meta: GridMeta, rows: Array[Array[Double]], bits: Int,
                     tile: Option[(Int, Int)]): Array[Byte] =
-    encodeCompressed(meta, rows, bits, tile, 8, Zlib.deflate)
+    write(meta, rows, bits, tile, 8, Zlib.deflate)
 
   /** LZW + Predictor=3 writer — GDAL's `COMPRESS=LZW,PREDICTOR=3`
     * combination for float rasters (TIFF TechNote 3): each chunk's
@@ -587,142 +395,19 @@ object GeoTiff {
     * before the LZW pass, which is what makes float DEMs compress. */
   def encodeLzwPred3(meta: GridMeta, rows: Array[Array[Double]], bits: Int,
                      tile: Option[(Int, Int)]): Array[Byte] =
-    encodeCompressed(meta, rows, bits, tile, 5, Lzw.encode, predictor = 3)
+    write(meta, rows, bits, tile, 5, Lzw.encode, predictor = 3)
 
   /** Deflate + Predictor=3 writer (`COMPRESS=DEFLATE,PREDICTOR=3`). */
   def encodeDeflatePred3(meta: GridMeta, rows: Array[Array[Double]], bits: Int,
                          tile: Option[(Int, Int)]): Array[Byte] =
-    encodeCompressed(meta, rows, bits, tile, 8, Zlib.deflate, predictor = 3)
+    write(meta, rows, bits, tile, 8, Zlib.deflate, predictor = 3)
 
   /** PackBits writer (Compression=32773, TIFF 6.0 §9) — the baseline RLE
     * every conformant reader supports; per-scanline packet restarts. */
   def encodePackBits(meta: GridMeta, rows: Array[Array[Double]], bits: Int,
-                     tile: Option[(Int, Int)]): Array[Byte] = {
-    val rowPx = tile.map(_._1).getOrElse(meta.width)
-    encodeCompressed(meta, rows, bits, tile, 32773,
-      raw => PackBits.encode(raw, rowPx * (bits / 8)))
-  }
-
-  private def encodeCompressed(meta: GridMeta, rows: Array[Array[Double]],
-                               bits: Int, tile: Option[(Int, Int)],
-                               compTag: Int,
-                               codec: Array[Byte] => Array[Byte],
-                               predictor: Int = 1): Array[Byte] = {
-    val w = meta.width
-    val h = meta.height
-    require(rows.length == h, s"expected $h rows, got ${rows.length}")
-    rows.foreach(r => require(r.length == w, s"expected $w cols, got ${r.length}"))
-    require(bits == 32 || bits == 64, s"bits must be 32 or 64, got $bits")
-    val px = bits / 8
-    def rawChunk(fill: ByteBuffer => Unit, size: Int): Array[Byte] = {
-      val bb = ByteBuffer.allocate(size).order(ByteOrder.LITTLE_ENDIAN)
-      fill(bb)
-      bb.array()
-    }
-    def put(bb: ByteBuffer, v: Double): Unit =
-      if (px == 8) { bb.putDouble(v); () } else { bb.putFloat(v.toFloat); () }
-    val rawChunks: Array[Array[Byte]] = tile match {
-      case None => // one strip per row, like encode
-        rows.map(r => rawChunk(bb => r.foreach(put(bb, _)), px * w))
-      case Some((tw, th)) =>
-        require(tw > 0 && th > 0 && tw % 16 == 0 && th % 16 == 0,
-          s"TIFF tile dims must be positive multiples of 16, got ${tw}x$th")
-        val across = (w + tw - 1) / tw
-        val down = (h + th - 1) / th
-        Array.tabulate(across * down) { t =>
-          rawChunk(bb => {
-            for (r <- 0 until th; c <- 0 until tw) {
-              val gr = (t / across) * th + r
-              val gc = (t % across) * tw + c
-              put(bb, if (gr < h && gc < w) rows(gr)(gc) else meta.nodata)
-            }
-          }, px * tw * th)
-        }
-    }
-    if (predictor == 3)
-      rawChunks.foreach(c =>
-        FpPredictor.difference(c, tile.map(_._1).getOrElse(w), px))
-    val chunks = rawChunks.map(codec)
-    val nChunks = chunks.length
-    val nodataStr = {
-      val s = if (meta.nodata == meta.nodata.toLong.toDouble)
-        meta.nodata.toLong.toString else meta.nodata.toString
-      s + " "
-    }
-    val entries = (if (tile.isEmpty) 13 else 14) +
-      (if (predictor == 3) 1 else 0)
-    val ifdOff = 8
-    var cursor = ifdOff + 2 + entries * 12 + 4
-    val chunkOffsetsOff = cursor; cursor += 4 * nChunks
-    val chunkCountsOff = cursor; cursor += 4 * nChunks
-    val scaleOff = cursor; cursor += 8 * 3
-    val tieOff = cursor; cursor += 8 * 6
-    val nodataOff = cursor; cursor += nodataStr.length
-    cursor = (cursor + 1) & ~1
-    val dataOff = cursor
-    val chunkStarts = chunks.scanLeft(dataOff)((acc, c) => (acc + c.length + 1) & ~1)
-    val b = ByteBuffer.allocate(chunkStarts.last).order(ByteOrder.LITTLE_ENDIAN)
-
-    b.put('I'.toByte).put('I'.toByte).putShort(42).putInt(ifdOff)
-    b.position(ifdOff)
-    b.putShort(entries.toShort)
-    def entry(tag: Int, typ: Int, count: Int)(writeValue: ByteBuffer => Unit): Unit = {
-      b.putShort(tag.toShort).putShort(typ.toShort).putInt(count)
-      val p = b.position()
-      writeValue(b)
-      b.position(p + 4)
-    }
-    def offsetsEntry(tag: Int, valueAt: Int, inlineVal: Int): Unit =
-      entry(tag, 4, nChunks)(_.putInt(if (nChunks == 1) inlineVal else valueAt))
-    entry(TAG_WIDTH, 4, 1)(_.putInt(w))
-    entry(TAG_HEIGHT, 4, 1)(_.putInt(h))
-    entry(TAG_BITS, 3, 1)(_.putShort(bits.toShort))
-    entry(TAG_COMPRESSION, 3, 1)(_.putShort(compTag.toShort))
-    entry(TAG_PHOTOMETRIC, 3, 1)(_.putShort(1))
-    tile match {
-      case None =>
-        offsetsEntry(TAG_STRIP_OFFSETS, chunkOffsetsOff, dataOff)
-        entry(TAG_SAMPLES_PER_PX, 3, 1)(_.putShort(1))
-        entry(TAG_ROWS_PER_STRIP, 4, 1)(_.putInt(1))
-        offsetsEntry(TAG_STRIP_COUNTS, chunkCountsOff, chunks(0).length)
-        if (predictor == 3) entry(TAG_PREDICTOR, 3, 1)(_.putShort(3))
-        entry(TAG_SAMPLE_FORMAT, 3, 1)(_.putShort(3))
-      case Some((tw, th)) =>
-        entry(TAG_SAMPLES_PER_PX, 3, 1)(_.putShort(1))
-        if (predictor == 3) entry(TAG_PREDICTOR, 3, 1)(_.putShort(3))
-        entry(TAG_TILE_WIDTH, 3, 1)(_.putShort(tw.toShort))
-        entry(TAG_TILE_LENGTH, 3, 1)(_.putShort(th.toShort))
-        offsetsEntry(TAG_TILE_OFFSETS, chunkOffsetsOff, dataOff)
-        offsetsEntry(TAG_TILE_COUNTS, chunkCountsOff, chunks(0).length)
-        entry(TAG_SAMPLE_FORMAT, 3, 1)(_.putShort(3))
-    }
-    entry(TAG_PIXEL_SCALE, 12, 3)(_.putInt(scaleOff))
-    entry(TAG_TIEPOINT, 12, 6)(_.putInt(tieOff))
-    // ASCII values of <= 4 bytes are INLINE per the TIFF spec (readers,
-    // ours included, treat them so) — short sentinels like "-1 " must
-    // carry their bytes, not a pointer
-    entry(TAG_GDAL_NODATA, 2, nodataStr.length)(bb =>
-      if (nodataStr.length <= 4) bb.put(nodataStr.getBytes("US-ASCII"))
-      else bb.putInt(nodataOff))
-    b.putInt(0)
-
-    b.position(chunkOffsetsOff)
-    for (t <- 0 until nChunks) b.putInt(chunkStarts(t))
-    b.position(chunkCountsOff)
-    for (t <- 0 until nChunks) b.putInt(chunks(t).length)
-    b.position(scaleOff)
-    b.putDouble(meta.dx).putDouble(meta.dy).putDouble(0.0)
-    b.position(tieOff)
-    b.putDouble(0.0).putDouble(0.0).putDouble(0.0)
-    b.putDouble(meta.originX).putDouble(meta.originY).putDouble(0.0)
-    b.position(nodataOff)
-    b.put(nodataStr.getBytes("US-ASCII"))
-    for (t <- 0 until nChunks) {
-      b.position(chunkStarts(t))
-      b.put(chunks(t))
-    }
-    b.array()
-  }
+                     tile: Option[(Int, Int)]): Array[Byte] =
+    write(meta, rows, bits, tile, 32773,
+      PackBits.encode(_, tile.fold(meta.width)(_._1) * (bits / 8)))
 
   /** Mean-downsample by factor `k` (GDAL AVERAGE resampling over VALID
     * cells: nodata/NaN excluded from each k×k block's mean; an all-
@@ -775,127 +460,124 @@ object GeoTiff {
     require(levels.nonEmpty && levels.forall(_ > 1) &&
       levels == levels.sorted && levels.distinct == levels,
       s"overview levels must be distinct ascending factors > 1, got $levels")
-    require(bits == 32 || bits == 64, s"bits must be 32 or 64, got $bits")
     require(compTag == 1 || compTag == 5 || compTag == 8 || compTag == 32773,
       s"unsupported compression tag $compTag")
+    write(meta, rows, bits, tile, compTag, codec, levels = levels)
+  }
+
+  /** The one TIFF writer behind every `encode*` entry point. Its pages
+    * are the full-resolution grid, then one [[downsample]]d grid per
+    * entry of `levels`. Each page is cut into strips (one per row) or
+    * `tile`s (edge tiles padded with nodata); each chunk gets
+    * Predictor=3 if asked, then `codec`. A page is laid out in file
+    * order: IFD (entries sorted by tag), chunk offset and byte-count
+    * arrays, pixel scale and tiepoint, the nodata string, then the
+    * word-aligned chunks. Next-IFD pointers chain the pages. `big`
+    * switches to BigTIFF widths: a 16-byte header, 20-byte entries, and
+    * LONG8 counts, offsets and chain pointers. */
+  private def write(meta: GridMeta, rows: Array[Array[Double]], bits: Int,
+      tile: Option[(Int, Int)], compTag: Int = 1,
+      codec: Array[Byte] => Array[Byte] = identity, predictor: Int = 1,
+      big: Boolean = false, levels: Seq[Int] = Nil): Array[Byte] = {
+    require(rows.length == meta.height, s"expected ${meta.height} rows, got ${rows.length}")
+    rows.foreach(r =>
+      require(r.length == meta.width, s"expected ${meta.width} cols, got ${r.length}"))
+    require(bits == 32 || bits == 64, s"bits must be 32 or 64, got $bits")
     tile.foreach { case (tw, th) =>
       require(tw > 0 && th > 0 && tw % 16 == 0 && th % 16 == 0,
         s"TIFF tile dims must be positive multiples of 16, got ${tw}x$th") }
     val px = bits / 8
-    val pages: Seq[(GridMeta, Array[Array[Double]])] =
-      (meta, rows) +: levels.map(k => downsample(meta, rows, k))
-    val nodataStr = {
-      val s = if (meta.nodata == meta.nodata.toLong.toDouble)
-        meta.nodata.toLong.toString else meta.nodata.toString
-      s + " "
-    }
-    def put(bb: ByteBuffer, v: Double): Unit =
-      if (px == 8) { bb.putDouble(v); () } else { bb.putFloat(v.toFloat); () }
-    // per-page chunking (same strip/tile geometry as the single-IFD
-    // writers, relative to the PAGE's dims) + compression
-    case class Page(m: GridMeta, chunks: Array[Array[Byte]])
-    val encoded = pages.map { case (m, rws) =>
-      require(rws.length == m.height && rws.forall(_.length == m.width),
-        s"page dims mismatch ${m.width}x${m.height}")
-      val raw: Array[Array[Byte]] = tile match {
-        case None =>
-          rws.map { r =>
-            val bb = ByteBuffer.allocate(px * m.width).order(ByteOrder.LITTLE_ENDIAN)
-            r.foreach(put(bb, _))
-            bb.array()
-          }
-        case Some((tw, th)) =>
-          val across = (m.width + tw - 1) / tw
-          val down = (m.height + th - 1) / th
-          Array.tabulate(across * down) { t =>
-            val bb = ByteBuffer.allocate(px * tw * th).order(ByteOrder.LITTLE_ENDIAN)
-            for (r <- 0 until th; c <- 0 until tw) {
-              val gr = (t / across) * th + r
-              val gc = (t % across) * tw + c
-              put(bb, if (gr < m.height && gc < m.width) rws(gr)(gc) else m.nodata)
-            }
-            bb.array()
-          }
+    val ofs = if (big) 8 else 4 // bytes per offset, count and IFD value field
+    def chunks(m: GridMeta, rws: Array[Array[Double]]): Array[Array[Byte]] = {
+      val (tw, th) = tile.getOrElse((m.width, 1))
+      val across = if (tile.isEmpty) 1 else (m.width + tw - 1) / tw
+      Array.tabulate(across * ((m.height + th - 1) / th)) { t =>
+        val bb = ByteBuffer.allocate(px * tw * th).order(ByteOrder.LITTLE_ENDIAN)
+        val (r0, c0) = ((t / across) * th, (t % across) * tw)
+        for (r <- r0 until r0 + th; c <- c0 until c0 + tw) {
+          val v = if (r < m.height && c < m.width) rws(r)(c) else m.nodata
+          if (px == 8) bb.putDouble(v) else bb.putFloat(v.toFloat)
+        }
+        val raw = bb.array()
+        if (predictor == 3) FpPredictor.difference(raw, tw, px)
+        codec(raw)
       }
-      Page(m, raw.map(codec))
     }
-    val entries = if (tile.isEmpty) 13 else 14
-    // layout: header, then per page [IFD | chunk arrays | geo arrays |
-    // nodata | chunks], next-IFD pointers chaining the pages
-    var cursor = 8
-    case class Lay(ifdOff: Int, offsOff: Int, cntsOff: Int, scaleOff: Int,
-                   tieOff: Int, nodataOff: Int, chunkStarts: Array[Int])
-    val lays = encoded.map { pg =>
-      val n = pg.chunks.length
-      val ifdOff = (cursor + 1) & ~1
-      cursor = ifdOff + 2 + entries * 12 + 4
-      val offsOff = cursor; cursor += 4 * n
-      val cntsOff = cursor; cursor += 4 * n
-      val scaleOff = cursor; cursor += 8 * 3
-      val tieOff = cursor; cursor += 8 * 6
-      val nodataOff = cursor; cursor += nodataStr.length
-      cursor = (cursor + 1) & ~1
-      val starts = pg.chunks.scanLeft(cursor)((acc, c) => (acc + c.length + 1) & ~1)
-      cursor = starts.last
-      Lay(ifdOff, offsOff, cntsOff, scaleOff, tieOff, nodataOff, starts)
+    val pages = ((meta, rows) +: levels.map(downsample(meta, rows, _)))
+      .map { case (m, rws) => (m, chunks(m, rws)) }
+    // GDAL writes the sentinel as ASCII; keep it round-trip exact
+    val nodata = ((if (meta.nodata == meta.nodata.toLong.toDouble)
+      meta.nodata.toLong.toString else meta.nodata.toString) + " ").getBytes("US-ASCII")
+    val tags = (Seq(TAG_WIDTH, TAG_HEIGHT, TAG_BITS, TAG_COMPRESSION,
+      TAG_PHOTOMETRIC, TAG_SAMPLES_PER_PX, TAG_SAMPLE_FORMAT,
+      TAG_PIXEL_SCALE, TAG_TIEPOINT, TAG_GDAL_NODATA) ++
+      (if (tile.isEmpty) Seq(TAG_STRIP_OFFSETS, TAG_ROWS_PER_STRIP, TAG_STRIP_COUNTS)
+       else Seq(TAG_TILE_WIDTH, TAG_TILE_LENGTH, TAG_TILE_OFFSETS, TAG_TILE_COUNTS)) ++
+      (if (predictor == 3) Seq(TAG_PREDICTOR) else Nil)).sorted
+    val ifdSize = (if (big) 8 else 2) + tags.length * (if (big) 20 else 12) + ofs
+    def align(at: Int): Int = (at + 1) & ~1
+    // per page: its IFD offset and its chunk starts (the last is the page end)
+    var end = if (big) 16 else 8
+    val layout = pages.map { case (_, cs) =>
+      val ifd = end
+      val dataOff = align(ifd + ifdSize + 2 * ofs * cs.length + 8 * 9 + nodata.length)
+      val starts = cs.scanLeft(dataOff)((at, c) => align(at + c.length))
+      end = starts.last
+      (ifd, starts)
     }
-    val b = ByteBuffer.allocate(cursor).order(ByteOrder.LITTLE_ENDIAN)
-    b.put('I'.toByte).put('I'.toByte).putShort(42).putInt(lays.head.ifdOff)
-    for (((pg, lay), pi) <- encoded.zip(lays).zipWithIndex) {
-      val m = pg.m
-      val nChunks = pg.chunks.length
-      b.position(lay.ifdOff)
-      b.putShort(entries.toShort)
-      def entry(tag: Int, typ: Int, count: Int)(writeValue: ByteBuffer => Unit): Unit = {
-        b.putShort(tag.toShort).putShort(typ.toShort).putInt(count)
-        val p = b.position()
-        writeValue(b)
-        b.position(p + 4)
+    val b = ByteBuffer.allocate(end).order(ByteOrder.LITTLE_ENDIAN)
+    def off(v: Long): Unit = if (big) b.putLong(v) else b.putInt(v.toInt)
+    b.put('I'.toByte).put('I'.toByte)
+    if (big) b.putShort(43).putShort(8).putShort(0) else b.putShort(42)
+    off(layout.head._1)
+    val nexts = layout.drop(1).map(_._1) :+ 0
+    for ((((m, cs), (ifd, starts)), next) <- pages.zip(layout).zip(nexts)) {
+      val n = cs.length
+      val arrays = ifd + ifdSize
+      val geo = arrays + 2 * ofs * n
+      b.position(ifd)
+      if (big) b.putLong(tags.length) else b.putShort(tags.length.toShort)
+      for (tag <- tags) {
+        def entry(typ: Int, count: Int)(value: => Any): Unit = {
+          b.putShort(tag.toShort).putShort(typ.toShort)
+          off(count)
+          val p = b.position()
+          value
+          b.position(p + ofs)
+        }
+        tag match {
+          case TAG_WIDTH => entry(4, 1)(b.putInt(m.width))
+          case TAG_HEIGHT => entry(4, 1)(b.putInt(m.height))
+          case TAG_BITS => entry(3, 1)(b.putShort(bits.toShort))
+          case TAG_COMPRESSION => entry(3, 1)(b.putShort(compTag.toShort))
+          case TAG_PHOTOMETRIC | TAG_SAMPLES_PER_PX => entry(3, 1)(b.putShort(1))
+          case TAG_ROWS_PER_STRIP => entry(4, 1)(b.putInt(1))
+          case TAG_PREDICTOR | TAG_SAMPLE_FORMAT => entry(3, 1)(b.putShort(3))
+          case TAG_TILE_WIDTH => entry(3, 1)(b.putShort(tile.get._1.toShort))
+          case TAG_TILE_LENGTH => entry(3, 1)(b.putShort(tile.get._2.toShort))
+          // LONG/LONG8 arrays are read inline when they fit the value
+          // field, so a one-chunk page carries the value, not a pointer
+          case TAG_STRIP_OFFSETS | TAG_TILE_OFFSETS =>
+            entry(if (big) 16 else 4, n)(off(if (n == 1) starts(0) else arrays))
+          case TAG_STRIP_COUNTS | TAG_TILE_COUNTS =>
+            entry(if (big) 16 else 4, n)(off(if (n == 1) cs(0).length else arrays + ofs * n))
+          case TAG_PIXEL_SCALE => entry(12, 3)(off(geo))
+          case TAG_TIEPOINT => entry(12, 6)(off(geo + 24))
+          // ASCII values that fit the value field are INLINE per the TIFF
+          // spec (readers, ours included, treat them so) — short
+          // sentinels like "-1 " must carry their bytes, not a pointer
+          case TAG_GDAL_NODATA => entry(2, nodata.length)(
+            if (nodata.length <= ofs) b.put(nodata) else off(geo + 72))
+        }
       }
-      def offsetsEntry(tag: Int, valueAt: Int, inlineVal: Int): Unit =
-        entry(tag, 4, nChunks)(_.putInt(if (nChunks == 1) inlineVal else valueAt))
-      entry(TAG_WIDTH, 4, 1)(_.putInt(m.width))
-      entry(TAG_HEIGHT, 4, 1)(_.putInt(m.height))
-      entry(TAG_BITS, 3, 1)(_.putShort(bits.toShort))
-      entry(TAG_COMPRESSION, 3, 1)(_.putShort(compTag.toShort))
-      entry(TAG_PHOTOMETRIC, 3, 1)(_.putShort(1))
-      tile match {
-        case None =>
-          offsetsEntry(TAG_STRIP_OFFSETS, lay.offsOff, lay.chunkStarts(0))
-          entry(TAG_SAMPLES_PER_PX, 3, 1)(_.putShort(1))
-          entry(TAG_ROWS_PER_STRIP, 4, 1)(_.putInt(1))
-          offsetsEntry(TAG_STRIP_COUNTS, lay.cntsOff, pg.chunks(0).length)
-          entry(TAG_SAMPLE_FORMAT, 3, 1)(_.putShort(3))
-        case Some((tw, th)) =>
-          entry(TAG_SAMPLES_PER_PX, 3, 1)(_.putShort(1))
-          entry(TAG_TILE_WIDTH, 3, 1)(_.putShort(tw.toShort))
-          entry(TAG_TILE_LENGTH, 3, 1)(_.putShort(th.toShort))
-          offsetsEntry(TAG_TILE_OFFSETS, lay.offsOff, lay.chunkStarts(0))
-          offsetsEntry(TAG_TILE_COUNTS, lay.cntsOff, pg.chunks(0).length)
-          entry(TAG_SAMPLE_FORMAT, 3, 1)(_.putShort(3))
-      }
-      entry(TAG_PIXEL_SCALE, 12, 3)(_.putInt(lay.scaleOff))
-      entry(TAG_TIEPOINT, 12, 6)(_.putInt(lay.tieOff))
-      entry(TAG_GDAL_NODATA, 2, nodataStr.length)(bb =>
-        if (nodataStr.length <= 4) bb.put(nodataStr.getBytes("US-ASCII"))
-        else bb.putInt(lay.nodataOff))
-      // chain to the next page's IFD (0 terminates)
-      b.putInt(if (pi + 1 < lays.length) lays(pi + 1).ifdOff else 0)
-      b.position(lay.offsOff)
-      for (t <- 0 until nChunks) b.putInt(lay.chunkStarts(t))
-      b.position(lay.cntsOff)
-      for (t <- 0 until nChunks) b.putInt(pg.chunks(t).length)
-      b.position(lay.scaleOff)
+      off(next) // chain to the next page's IFD; 0 ends the chain
+      starts.init.foreach(off(_))
+      cs.foreach(c => off(c.length))
       b.putDouble(m.dx).putDouble(m.dy).putDouble(0.0)
-      b.position(lay.tieOff)
       b.putDouble(0.0).putDouble(0.0).putDouble(0.0)
       b.putDouble(m.originX).putDouble(m.originY).putDouble(0.0)
-      b.position(lay.nodataOff)
-      b.put(nodataStr.getBytes("US-ASCII"))
-      for (t <- 0 until nChunks) {
-        b.position(lay.chunkStarts(t))
-        b.put(pg.chunks(t))
-      }
+      b.put(nodata)
+      for ((c, at) <- cs.zip(starts)) b.position(at).put(c)
     }
     b.array()
   }

@@ -621,14 +621,17 @@ object QueriesIngest {
                byte_len
         FROM f WHERE frame_idx * stride < byte_len"""
 
-  // GeoTIFF byte-boundary round trip (SURVEY §2.1 ingest utility; the
-  // reference's rioxarray load, differencing_functions.py:69–79): raster B
-  // → dense strips → ENCODE to real GeoTIFF bytes inside an executor
-  // (per-tile assembly, tile-bounded memory) → DECODE tile-parallel →
-  // pixel table. The oracle is the ORIGINAL grid SQL, so the row is green
-  // only if bytes→pixels→bytes is bit-lossless. The 128×128 fixture is
-  // one tile; at 100 TB each tile is one bounded group of this same shape.
-  private val geotiffRoundtrip: Q = (s, d) => {
+  // GeoTIFF byte-boundary round trip through the writer `enc` (SURVEY §2.1
+  // ingest utility; the reference's rioxarray load,
+  // differencing_functions.py:69–79): raster B → dense strips → ENCODE to
+  // real GeoTIFF bytes inside an executor (per-tile assembly, tile-bounded
+  // memory) → DECODE tile-parallel → pixel table. Every variant below
+  // shares the ORIGINAL grid SQL as its oracle, so a row is green only if
+  // bytes→pixels→bytes is bit-lossless through that writer. The 128×128
+  // fixture is one tile; at 100 TB each tile is one bounded group of this
+  // same shape.
+  private def geotiffRoundtripVia(
+      enc: (graft.raster.GridMeta, Array[Array[Double]]) => Array[Byte]): Q = (s, d) => {
     import s.implicits._
     val meta = graft.raster.GridMeta()
     val dense = graft.ingest.DenseRaster.toDense(
@@ -638,12 +641,16 @@ object QueriesIngest {
       .groupByKey(_ => 0)
       .mapGroups { (id: Int, it: Iterator[(Int, Seq[Double])]) =>
         val rows = it.toArray.sortBy(_._1).map(_._2.toArray)
-        (id, graft.ingest.GeoTiff.encode(meta, rows))
+        (id, enc(meta, rows))
       }
       .toDF("tile_id", "data")
     graft.ingest.GeoTiff.tilesToPixels(tiles)
       .select(col("col"), col("row"), col("value"))
   }
+
+  // The plain writer: uncompressed float64 strips, one per row.
+  private val geotiffRoundtrip: Q = geotiffRoundtripVia(
+    graft.ingest.GeoTiff.encode(_, _))
 
   private val geotiffRoundtripSql =
     s"""WITH g AS (${graft.raster.PixelGrid.gridSql(1)})
@@ -654,44 +661,16 @@ object QueriesIngest {
   // differencing_functions.py:696–705). Same oracle as the uncompressed
   // round trip: the row is green only if LZW encode → decode is
   // bit-lossless over every 64×64 tile.
-  private val geotiffLzwRoundtrip: Q = (s, d) => {
-    import s.implicits._
-    val meta = graft.raster.GridMeta()
-    val dense = graft.ingest.DenseRaster.toDense(
-      graft.raster.PixelGrid.grid(s, d, 1), meta)
-    val tiles = dense.select(col("row"), col("values"))
-      .as[(Int, Seq[Double])]
-      .groupByKey(_ => 0)
-      .mapGroups { (id: Int, it: Iterator[(Int, Seq[Double])]) =>
-        val rows = it.toArray.sortBy(_._1).map(_._2.toArray)
-        (id, graft.ingest.GeoTiff.encodeLzw(meta, rows, 64, Some((64, 64))))
-      }
-      .toDF("tile_id", "data")
-    graft.ingest.GeoTiff.tilesToPixels(tiles)
-      .select(col("col"), col("row"), col("value"))
-  }
+  private val geotiffLzwRoundtrip: Q = geotiffRoundtripVia(
+    graft.ingest.GeoTiff.encodeLzw(_, _, 64, Some((64, 64))))
 
   // Deflate-compressed (Compression=8, GDAL "compress=DEFLATE") GeoTIFF
   // round trip — the other compression GDAL emits for the reference's
   // rasters. Strip-per-row layout this time (LZW already gates tiles), so
   // both chunk organizations pass through a compressed decode each run.
   // Same oracle: green only if zlib encode → decode is bit-lossless.
-  private val geotiffDeflateRoundtrip: Q = (s, d) => {
-    import s.implicits._
-    val meta = graft.raster.GridMeta()
-    val dense = graft.ingest.DenseRaster.toDense(
-      graft.raster.PixelGrid.grid(s, d, 1), meta)
-    val tiles = dense.select(col("row"), col("values"))
-      .as[(Int, Seq[Double])]
-      .groupByKey(_ => 0)
-      .mapGroups { (id: Int, it: Iterator[(Int, Seq[Double])]) =>
-        val rows = it.toArray.sortBy(_._1).map(_._2.toArray)
-        (id, graft.ingest.GeoTiff.encodeDeflate(meta, rows, 64, None))
-      }
-      .toDF("tile_id", "data")
-    graft.ingest.GeoTiff.tilesToPixels(tiles)
-      .select(col("col"), col("row"), col("value"))
-  }
+  private val geotiffDeflateRoundtrip: Q = geotiffRoundtripVia(
+    graft.ingest.GeoTiff.encodeDeflate(_, _, 64, None))
 
   // Predictor=3 GeoTIFF round trip — GDAL's COMPRESS=LZW,PREDICTOR=3
   // combination for float rasters (TIFF TechNote 3): scanline byte-plane
@@ -699,63 +678,21 @@ object QueriesIngest {
   // so the per-tile-scanline filter geometry is exercised, not just the
   // whole-strip case. Same oracle as the uncompressed round trip: green
   // only if filter + LZW + layout are jointly bit-lossless.
-  private val geotiffPred3Roundtrip: Q = (s, d) => {
-    import s.implicits._
-    val meta = graft.raster.GridMeta()
-    val dense = graft.ingest.DenseRaster.toDense(
-      graft.raster.PixelGrid.grid(s, d, 1), meta)
-    val tiles = dense.select(col("row"), col("values"))
-      .as[(Int, Seq[Double])]
-      .groupByKey(_ => 0)
-      .mapGroups { (id: Int, it: Iterator[(Int, Seq[Double])]) =>
-        val rows = it.toArray.sortBy(_._1).map(_._2.toArray)
-        (id, graft.ingest.GeoTiff.encodeLzwPred3(meta, rows, 64, Some((32, 32))))
-      }
-      .toDF("tile_id", "data")
-    graft.ingest.GeoTiff.tilesToPixels(tiles)
-      .select(col("col"), col("row"), col("value"))
-  }
+  private val geotiffPred3Roundtrip: Q = geotiffRoundtripVia(
+    graft.ingest.GeoTiff.encodeLzwPred3(_, _, 64, Some((32, 32))))
 
   // BigTIFF round trip (magic 43, u64 offsets — GDAL's BIGTIFF=YES /
   // automatic-past-4-GiB layout): the format a 100-TB mosaic actually
   // needs, since classic TIFF cannot address beyond 4 GiB. Tiled so the
   // 20-byte IFD entries, u64 counts, AND LONG8 offset arrays all pass
   // through the decoder; same oracle as the classic round trip.
-  private val bigtiffRoundtrip: Q = (s, d) => {
-    import s.implicits._
-    val meta = graft.raster.GridMeta()
-    val dense = graft.ingest.DenseRaster.toDense(
-      graft.raster.PixelGrid.grid(s, d, 1), meta)
-    val tiles = dense.select(col("row"), col("values"))
-      .as[(Int, Seq[Double])]
-      .groupByKey(_ => 0)
-      .mapGroups { (id: Int, it: Iterator[(Int, Seq[Double])]) =>
-        val rows = it.toArray.sortBy(_._1).map(_._2.toArray)
-        (id, graft.ingest.GeoTiff.encodeBig(meta, rows, 64, Some((32, 32))))
-      }
-      .toDF("tile_id", "data")
-    graft.ingest.GeoTiff.tilesToPixels(tiles)
-      .select(col("col"), col("row"), col("value"))
-  }
+  private val bigtiffRoundtrip: Q = geotiffRoundtripVia(
+    graft.ingest.GeoTiff.encodeBig(_, _, 64, Some((32, 32))))
 
   // PackBits (Compression=32773) round trip — the TIFF 6.0 baseline RLE
   // every conformant reader ships; per-scanline packet restarts.
-  private val geotiffPackbitsRoundtrip: Q = (s, d) => {
-    import s.implicits._
-    val meta = graft.raster.GridMeta()
-    val dense = graft.ingest.DenseRaster.toDense(
-      graft.raster.PixelGrid.grid(s, d, 1), meta)
-    val tiles = dense.select(col("row"), col("values"))
-      .as[(Int, Seq[Double])]
-      .groupByKey(_ => 0)
-      .mapGroups { (id: Int, it: Iterator[(Int, Seq[Double])]) =>
-        val rows = it.toArray.sortBy(_._1).map(_._2.toArray)
-        (id, graft.ingest.GeoTiff.encodePackBits(meta, rows, 64, None))
-      }
-      .toDF("tile_id", "data")
-    graft.ingest.GeoTiff.tilesToPixels(tiles)
-      .select(col("col"), col("row"), col("value"))
-  }
+  private val geotiffPackbitsRoundtrip: Q = geotiffRoundtripVia(
+    graft.ingest.GeoTiff.encodePackBits(_, _, 64, None))
 
   // PNG byte-boundary round trip (ingest.Png — the compressed-image
   // codec of the multimodal story, W3C PNG over the JDK zlib): raster B

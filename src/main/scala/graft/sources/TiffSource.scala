@@ -234,9 +234,14 @@ private[sources] class TiffTable(path: String)
     require(Set("none", "lzw", "deflate").contains(compression),
       s"unsupported tiff compression '$compression' (none|lzw|deflate)")
     val blockSize = Option(opts.get("blockSize")).map(_.toInt).getOrElse(0)
+    require(blockSize == 0 || (blockSize > 0 && blockSize % 16 == 0),
+      s"tiff blockSize must be 0 (strips) or a positive multiple of 16, got $blockSize")
     val overviews: Seq[Int] =
       Option(opts.get("overviews")).map(_.split(",").toSeq.map(_.trim.toInt))
         .getOrElse(Nil)
+    require(overviews.forall(_ > 1) && overviews == overviews.sorted &&
+      overviews.distinct == overviews,
+      s"tiff overviews must be distinct ascending factors > 1, got '${opts.get("overviews")}'")
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =

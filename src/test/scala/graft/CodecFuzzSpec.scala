@@ -108,6 +108,9 @@ class CodecFuzzSpec extends AnyFunSuite {
       bs => GeoTiff.decode(bs), iters = 150)
     fuzz("tiff_big", GeoTiff.encodeBig(m, g, 64, Some((16, 16))),
       bs => GeoTiff.decode(bs), iters = 150)
+    fuzz("tiff_overviews", GeoTiff.encodeOverviews(m, g, 32, Some((16, 16)),
+      Seq(2, 4), 5, graft.ingest.Lzw.encode),
+      bs => { GeoTiff.levelCount(bs); GeoTiff.decodeLevel(bs, 1) }, iters = 150)
   }
 
   test("PNG: fuzz holds the contract") {

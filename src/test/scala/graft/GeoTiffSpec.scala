@@ -323,4 +323,95 @@ class GeoTiffSpec extends SparkSuite {
       assert(java.lang.Double.doubleToLongBits(r1(r)(c)) ==
         java.lang.Double.doubleToLongBits(ref(r)(c)))
   }
+
+  test("encodeOverviews with the wrong dims fails naming them, before downsampling") {
+    val short = intercept[IllegalArgumentException](
+      GeoTiff.encodeOverviews(meta, rows.take(2), 64, None, Seq(2)))
+    assert(short.getMessage.contains("expected 4 rows, got 2"), short.getMessage)
+    val narrow = intercept[IllegalArgumentException](
+      GeoTiff.encodeOverviews(meta, rows.map(_.take(3)), 64, None, Seq(2)))
+    assert(narrow.getMessage.contains("expected 5 cols, got 3"), narrow.getMessage)
+  }
+
+  // Byte pin: one SHA-256 per public writer over a fixed matrix of grids,
+  // layouts, sample widths and nodata sentinels, captured from the
+  // writers before they were folded into one page-chain writer. The
+  // round-trip tests above gate pixels; this gates every output byte.
+  private def pinDigest(outputs: Seq[Array[Byte]]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    for (o <- outputs) {
+      md.update(java.nio.ByteBuffer.allocate(4).putInt(o.length).array())
+      md.update(o)
+    }
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  private def pinCells(m: GridMeta): Array[Array[Double]] =
+    Array.tabulate(m.height, m.width) { (r, c) =>
+      if ((r * 7 + c) % 13 == 0) m.nodata
+      else if (r == 3 && c == 5) Double.NaN
+      else r * 100.0 + ((r * 37 + c * 11) % 101) * 0.125 + c / 3.0
+    }
+
+  test("every writer's output bytes are pinned over a fixed layout matrix") {
+    type W = (GridMeta, Array[Array[Double]], Int, Option[(Int, Int)]) => Array[Byte]
+    val grid = GridMeta(originX = 500000.5, originY = 4100000.25,
+      dx = 1.5, dy = 2.0, width = 37, height = 21, nodata = -9999.0)
+    // -9999 is a pointer in classic TIFF and inline in BigTIFF; -1 is
+    // inline in both. The 16x16 one-tile and 9x1 one-strip grids take
+    // the inline chunk-offset path.
+    val grids = for (nd <- Seq(-9999.0, -1.0)) yield grid.copy(nodata = nd)
+    val single = Seq(grid.copy(width = 16, height = 16) -> Some((16, 16)),
+      grid.copy(width = 9, height = 1) -> None)
+    val layouts = Seq[Option[(Int, Int)]](None, Some((16, 16)), Some((32, 16)))
+    def matrix(w: W): Seq[Array[Byte]] =
+      (for (m <- grids; bits <- Seq(32, 64); t <- layouts)
+        yield w(m, pinCells(m), bits, t)) ++
+      single.map { case (m, t) => w(m, pinCells(m), 64, t) }
+    val writers = Seq[(String, W)](
+      ("encode", GeoTiff.encode(_, _, _, _)),
+      ("encodeBig", GeoTiff.encodeBig(_, _, _, _)),
+      ("encodeLzw", GeoTiff.encodeLzw(_, _, _, _)),
+      ("encodeDeflate", GeoTiff.encodeDeflate(_, _, _, _)),
+      ("encodeLzwPred3", GeoTiff.encodeLzwPred3(_, _, _, _)),
+      ("encodeDeflatePred3", GeoTiff.encodeDeflatePred3(_, _, _, _)),
+      ("encodePackBits", GeoTiff.encodePackBits(_, _, _, _)))
+    val codecs = Seq[(String, Int, Array[Byte] => Array[Byte])](
+      ("none", 1, identity), ("lzw", 5, graft.ingest.Lzw.encode),
+      ("deflate", 8, graft.ingest.Zlib.deflate))
+    val got = writers.map { case (name, w) => name -> pinDigest(matrix(w)) } ++
+      Seq("encode/2" -> pinDigest((grids ++ single.map(_._1))
+        .map(m => GeoTiff.encode(m, pinCells(m))))) ++
+      codecs.map { case (name, tag, codec) =>
+        s"encodeOverviews/$name" -> pinDigest(
+          for (m <- grids; t <- layouts.take(2); levels <- Seq(Seq(2), Seq(2, 4)))
+            yield GeoTiff.encodeOverviews(m, pinCells(m), 64, t, levels, tag, codec))
+      }
+    val want = Seq(
+      "encode" ->
+        "a0e8bf44e8c404714ad03a0ee96c8c2d5c1e1145421db70d463997217fe1fdce",
+      "encodeBig" ->
+        "79c0dd10fa3420afc5ab344c5c5443a4b6abcd5f8dc113319d3eba17d825f1b1",
+      "encodeLzw" ->
+        "61262b3d6736859cf94a5d2aec55514bc760b30f2899524f777527c76191cd4c",
+      "encodeDeflate" ->
+        "7dc2dcd350216170f26125dbf2d43c38138624cf3385eed8b56219b6a9abfeaa",
+      "encodeLzwPred3" ->
+        "76075a2a4bd4bff0589fcfed43699ebfa50bbdf7bcf49eccd8bb371e5ab773cf",
+      "encodeDeflatePred3" ->
+        "aa566aeb5b50ba8a7025cf96ed3d4dfec8c61d6750a6976cc843f366346daa7b",
+      "encodePackBits" ->
+        "fa9ef0bfc697e6015dbf06cda3b0ada93041f83e02e8c11b3bd76318af022060",
+      "encode/2" ->
+        "be512cec8136e36800ed10edf18a1b122fc101e1b85cf503ca2d3a2b2418f0e1",
+      "encodeOverviews/none" ->
+        "295f142d58b45cb63636ef326a3d87545788619303631c7245c8df67e63e2255",
+      "encodeOverviews/lzw" ->
+        "aad63b6ea4acf2c196ff72c349f7eb5f90daea99a135efd011f2bfaf96be8bb5",
+      "encodeOverviews/deflate" ->
+        "79ace00a147c9f910f6143af1fa43abab68540c829ee7d42bd9233004cf9f1b8")
+    val diff = got.zip(want).collect { case ((n, g), (_, w)) if g != w => s"$n -> $g" }
+    assert(got.map(_._1) == want.map(_._1))
+    if (diff.nonEmpty) fail(diff.mkString("writer bytes moved:\n", "\n", ""))
+  }
 }

@@ -307,6 +307,22 @@ class TiffSourceSpec extends SparkSuite {
       "header-extent pruning must decode only the 4 intersecting tiles")
   }
 
+  test("bad blockSize and overviews fail on the driver, naming the option") {
+    val px = Seq((0, 0, 1.0), (1, 1, 2.0)).toDF("col", "row", "value")
+    for ((k, v) <- Seq("blockSize" -> "-16", "blockSize" -> "20",
+                       "overviews" -> "4,2", "overviews" -> "1")) {
+      val dir = java.nio.file.Files.createTempDirectory("tiff_dsv2_opts").toFile
+      val e = intercept[IllegalArgumentException] {
+        px.coalesce(1).write.format("graft.sources.TiffSource")
+          .option("width", "4").option("height", "4").option(k, v)
+          .mode("append").save(dir.getAbsolutePath)
+      }
+      assert(e.getMessage.contains(k), s"$k=$v: ${e.getMessage}")
+      val written = Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
+      assert(written.isEmpty, s"$k=$v wrote ${written.map(_.getName).toSeq}")
+    }
+  }
+
   test("overview pyramid round-trips through the connector level option") {
     val dir = java.nio.file.Files.createTempDirectory("tiff_dsv2_ovr").toFile
     // 8x8 tile of exact binary fractions -> exact block means
