@@ -1,14 +1,14 @@
 package graft.api
 
 import graft.functions.CacheRegistry.Shareable
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.Canon.round
 import graft.functions.SphericalModel
 import graft.fit.VariogramFit
 import graft.fit.VariogramFit.Bin
 import graft.geom.Geom
 import graft.raster.{GridMeta, PixelGrid}
+import graft.rng.Rand
 import graft.vario.Vario
 
 /** High-level facade mirroring the reference's analysis workflow
@@ -25,8 +25,10 @@ import graft.vario.Vario
   *  - `fit_best_model` (TRF + AIC)  → [[fitModel]]
   *  - `RegionalUncertaintyEstimator` / `ApplyUncertainty` → [[uncertainty]]
   *
-  * Everything table-sized stays distributed; only the ≤(runs×bins)
-  * variogram and scalar statistics reach the driver.
+  * Everything table-sized stays distributed: the variogram reaches the
+  * driver as ≤(runs×bins) rows, and each uncertainty report as one
+  * count/RMS/extent aggregate. The Monte-Carlo propagation then runs on
+  * the driver, bounded by `nPairs` × draws, never by the raster.
   */
 class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
 
@@ -109,35 +111,17 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
     * total       = quadrature (:1554–1573). */
   def uncertainty(dz: DataFrame, polygons: Seq[(String, String)],
                   model: SphericalModel, nPairs: Int = 20000,
-                  seed: Long = 42L): DataFrame = {
-    import spark.implicits._
-    val rows = polygons.map { case (name, wkt) =>
-      val pts = Geom.wktToPoints(wkt)
-      val verts = Geom.polyLit(pts)
-      val inPoly = dz.filter(Geom.pointInPolygon(col("x"), col("y"), verts))
-      val (n, rms) = {
-        val r = inPoly.agg(count(lit(1)), sqrt(avg(col("value") * col("value"))))
-          .head()
-        (r.getLong(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
-      }
-      val uncorr = rms / math.sqrt(n.toDouble)
-      val mc = ErrorAnalysis.acceptedPairs(spark, pts, nPairs, seed)
-        .select(sqrt(pow(col("x2") - col("x1"), 2) + pow(col("y2") - col("y1"), 2)).as("h"))
-      val meanCov = mc.agg(avg(model.cov(col("h")))).head().getDouble(0)
-      val corr = math.sqrt(math.max(meanCov, 0.0))
-      UncertaintyReport(name, n, bias = Double.NaN, rms,
-        uncorrelated = uncorr, correlated = corr,
-        total = math.sqrt(uncorr * uncorr + corr * corr))
+                  seed: Long = 42L): DataFrame =
+    polygonReports(dz, polygons, nPairs, seed) { (pairs, _) =>
+      ErrorAnalysis.corrSigmas(pairs, Seq(model)).head._1
     }
-    rows.toDF()
-  }
 
   /** Per-cell σ(x,y) map from the (debiased) Δz pixels: RMS of value over
     * `cell`-sized squares — the data-driven analog of the reference
     * raster handler's `sigma2_map` (variography_uncertainty.py:1345–1355;
-    * its nearest-neighbour lookup becomes a cell-key broadcast join here).
+    * its nearest-neighbour lookup becomes a cell-key lookup here).
     * One hash aggregate over the pixel table; the map is per-tile-sized
-    * (≤ (extent/cell)² rows), a broadcast dim at any raster scale. */
+    * (≤ (extent/cell)² rows). */
   def sigmaMap(dz: DataFrame, cell: Double): DataFrame =
     dz.groupBy(
         floor(col("x") / cell).cast("long").as("gx"),
@@ -149,51 +133,51 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
     * (estimate_monte_carlo with sigma_func,
     * variography_uncertainty.py:1263–1274) — the chain the reference's
     * workflow implies: dh/dt-WLS weights → per-pixel σ map → MC
-    * propagation. Same seeded rejection pair machinery as [[uncertainty]]
-    * (identical salts, so a constant σ map = √σ²_tot reproduces its
-    * correlated term exactly); each endpoint resolves σ via a broadcast
-    * join on its `cell`-key, falling back to the polygon RMS for cells
-    * the map doesn't cover (the nearest-neighbour analog of :1350–1353).
-    */
+    * propagation. Same accepted pairs as [[uncertainty]], so a constant
+    * σ map = √σ²_tot reproduces its correlated term. The σ map (one row
+    * per `(gx, gy)` cell) is collected to the driver, and each endpoint
+    * looks up its cell's σ, falling back to the polygon RMS for cells
+    * the map doesn't cover or holds null (the nearest-neighbour analog
+    * of :1350–1353). */
   def uncertaintyHetero(dz: DataFrame, polygons: Seq[(String, String)],
                         model: SphericalModel, sigma: DataFrame, cell: Double,
                         nPairs: Int = 20000, seed: Long = 42L): DataFrame = {
-    import spark.implicits._
-    val sigmaB = sigma.persistShared()
-    val rows = polygons.map { case (name, wkt) =>
-      val pts = Geom.wktToPoints(wkt)
-      val verts = Geom.polyLit(pts)
-      val inPoly = dz.filter(Geom.pointInPolygon(col("x"), col("y"), verts))
-      val (n, rms) = {
-        val r = inPoly.agg(count(lit(1)), sqrt(avg(col("value") * col("value"))))
-          .head()
-        (r.getLong(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
-      }
-      val uncorr = rms / math.sqrt(n.toDouble)
-      val mc = ErrorAnalysis.acceptedPairs(spark, pts, nPairs, seed)
-      val g1 = sigmaB.select(col("gx").as("gx1"), col("gy").as("gy1"),
-        col("sigma").as("sig1"))
-      val g2 = sigmaB.select(col("gx").as("gx2"), col("gy").as("gy2"),
-        col("sigma").as("sig2"))
-      val rho = greatest(lit(-1.0), least(lit(1.0), model.rho(
-        sqrt(pow(col("x2") - col("x1"), 2) + pow(col("y2") - col("y1"), 2)))))
-      val meanRhoSS = mc
-        .withColumn("gx1", floor(col("x1") / cell).cast("long"))
-        .withColumn("gy1", floor(col("y1") / cell).cast("long"))
-        .withColumn("gx2", floor(col("x2") / cell).cast("long"))
-        .withColumn("gy2", floor(col("y2") / cell).cast("long"))
-        .join(broadcast(g1), Seq("gx1", "gy1"), "left")
-        .join(broadcast(g2), Seq("gx2", "gy2"), "left")
-        .select((rho * coalesce(col("sig1"), lit(rms)) *
-          coalesce(col("sig2"), lit(rms))).as("t"))
-        .agg(avg(col("t"))).head().getDouble(0)
-      val corr = math.sqrt(math.max(meanRhoSS, 0.0))
-      UncertaintyReport(name, n, bias = Double.NaN, rms,
-        uncorrelated = uncorr, correlated = corr,
-        total = math.sqrt(uncorr * uncorr + corr * corr))
+    val rows = sigma.select(col("gx").cast("long"), col("gy").cast("long"),
+      col("sigma").cast("double")).collect()
+    val sig = rows.collect { case r if !r.isNullAt(2) =>
+      (r.getLong(0), r.getLong(1)) -> r.getDouble(2) }.toMap
+    require(rows.map(r => (r.get(0), r.get(1))).distinct.length == rows.length,
+      "the sigma map has more than one row for a (gx, gy) cell")
+    def cellOf(x: Double, y: Double) =
+      (math.floor(x / cell).toLong, math.floor(y / cell).toLong)
+    polygonReports(dz, polygons, nPairs, seed) { (pairs, rms) =>
+      ErrorAnalysis.sigma(pairs.map { case p @ (x1, y1, x2, y2) =>
+        val rho = math.max(-1.0, math.min(1.0,
+          1.0 - model.gammaTotal(ErrorAnalysis.dist(p)) / model.totalSill))
+        rho * sig.getOrElse(cellOf(x1, y1), rms) * sig.getOrElse(cellOf(x2, y2), rms)
+      }.sum / pairs.length)
     }
-    sigmaB.unpersist()
-    rows.toDF()
+  }
+
+  /** The per-polygon report of [[uncertainty]] and [[uncertaintyHetero]]:
+    * pixel count and RMS from one aggregate, then `corr` of the polygon's
+    * accepted pairs (and its RMS) as the correlated term. */
+  private def polygonReports(dz: DataFrame, polygons: Seq[(String, String)],
+                             nPairs: Int, seed: Long)
+                            (corr: (Array[ErrorAnalysis.Pair], Double) => Double)
+      : DataFrame = {
+    import spark.implicits._
+    polygons.map { case (name, wkt) =>
+      val pts = Geom.wktToPoints(wkt)
+      val s = ErrorAnalysis.dzStats(
+        dz.filter(Geom.pointInPolygon(col("x"), col("y"), Geom.polyLit(pts))),
+        s"polygon $name contains no dz pixels: $wkt")
+      val uncorr = s.rms / math.sqrt(s.n.toDouble)
+      val c = corr(ErrorAnalysis.pairsIn(s"polygon $name", pts, nPairs, seed), s.rms)
+      UncertaintyReport(name, s.n, bias = Double.NaN, s.rms,
+        uncorrelated = uncorr, correlated = c,
+        total = math.sqrt(uncorr * uncorr + c * c))
+    }.toDF()
   }
 
   /** Reference-parity uncertainty block: every attribute the reference's
@@ -221,9 +205,10 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
     *    (`calc_mean_random_uncorrelated`, :1544–1552), not polygon
     *    pixels; totals are quadrature per variant (:1554–1573).
     *
-    * Everything pair×draw-sized stays distributed (one crossJoin +
-    * grouped aggregate per scope); only ≤nBoot per-draw means reach the
-    * driver for the percentile step. */
+    * One aggregate over Δz (count, RMS, extents) is the only Spark work.
+    * Both pair sets are drawn and every draw and bound vector is
+    * evaluated over them on the driver, as the reference does with
+    * NumPy: the cost is set by `nPairs` × draws, never by the raster. */
   def uncertaintyFull(dz: DataFrame, polygonName: String, polygonWkt: String,
                       fit: VariogramFit.FitResult,
                       paramDraws: Array[Array[Double]],
@@ -232,20 +217,12 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
     require(paramDraws.nonEmpty, "uncertaintyFull needs bootstrap draws")
     val k = fit.nComponents
     val ng = fit.hasNugget
-    def split(p: Array[Double]): (Seq[Double], Seq[Double], Double) =
-      (p.take(k).toSeq, p.slice(k, 2 * k).toSeq, if (ng) p(2 * k) else 0.0)
+    def model(p: Array[Double]): SphericalModel =
+      SphericalModel(p.take(k).toSeq, p.slice(k, 2 * k).toSeq, if (ng) p(2 * k) else 0.0)
 
     // whole-raster uncorrelated term + extents (one aggregate)
-    val ext = dz.agg(count(lit(1)), sqrt(avg(col("value") * col("value"))),
-      min("x"), max("x"), min("y"), max("y")).head()
-    val nValid = ext.getLong(0)
-    // clear failure over an empty Δz frame: the aggregates are NULL and
-    // getDouble would throw ROW_VALUE_IS_NULL
-    require(nValid > 0, "uncertaintyFull: the dz frame has no valid pixels")
-    val rms = ext.getDouble(1)
-    val (minX, maxX, minY, maxY) =
-      (ext.getDouble(2), ext.getDouble(3), ext.getDouble(4), ext.getDouble(5))
-    val uncorr = rms / math.sqrt(nValid.toDouble)
+    val s = ErrorAnalysis.dzStats(dz, "uncertaintyFull: the dz frame has no valid pixels")
+    val uncorr = s.rms / math.sqrt(s.n.toDouble)
 
     val pts = Geom.wktToPoints(polygonWkt)
     // shoelace area of the (closed) polygon ring — reference polygon.area
@@ -253,52 +230,16 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
       (pts :+ pts.head).sliding(2).map { w =>
         w(0)._1 * w(1)._2 - w(1)._1 * w(0)._2
       }.sum) / 2.0
-    val areaBbox = (maxX - minX) * (maxY - minY)
-    val areaDetailed = nValid.toDouble * math.abs(meta.dx * meta.dy)
+    val areaBbox = (s.maxX - s.minX) * (s.maxY - s.minY)
+    val areaDetailed = s.n.toDouble * math.abs(meta.dx * meta.dy)
 
-    val hOf = sqrt(pow(col("x2") - col("x1"), 2) +
-      pow(col("y2") - col("y1"), 2)).as("h")
-    val polyPairs = ErrorAnalysis.acceptedPairs(spark, pts, nPairs, seed)
-      .select(hOf)
-    val bboxPts = Seq((minX, minY), (maxX, minY), (maxX, maxY), (minX, maxY))
-    val rasterPairs = ErrorAnalysis.acceptedPairs(spark, bboxPts, nPairs, seed)
-      .select(hOf)
-
-    // per-draw (σ_tot, σ_1..σ_k) over a fixed pair set — one crossJoin +
-    // one grouped aggregate, draws broadcast
-    def propagate(pairs: DataFrame, draws: Seq[(Int, Seq[Double], Seq[Double], Double)])
-        : Map[Int, (Double, Seq[Double])] = {
-      import spark.implicits._
-      val dd = broadcast(draws.toDF("draw", "sills", "ranges", "nugget")
-        .withColumn("s2tot",
-          expr("aggregate(sills, CAST(0.0 AS DOUBLE), (a, x) -> a + x)") +
-            col("nugget")))
-      def sph(i: Int): Column = {
-        val c = col("sills")(i); val a = col("ranges")(i); val h = col("h")
-        when(h < a, c * (lit(1.5) * h / a - lit(0.5) * pow(h / a, 3)))
-          .otherwise(c)
-      }
-      val gamTot = (0 until k).map(sph).reduce(_ + _) + col("nugget")
-      val cols = (col("s2tot") - gamTot).as("c_tot") +:
-        (0 until k).map(i => (col("s2tot") - (sph(i) + col("nugget"))).as(s"c_$i"))
-      val aggCols = avg("c_tot").as("m_tot") +:
-        (0 until k).map(i => avg(s"c_$i").as(s"m_$i"))
-      pairs.crossJoin(dd)
-        .select(col("draw") +: cols: _*)
-        .groupBy("draw").agg(aggCols.head, aggCols.tail: _*)
-        .collect().map { r =>
-          def sig(x: Double) = math.sqrt(math.max(x, 0.0))
-          r.getAs[Int]("draw") ->
-            (sig(r.getAs[Double]("m_tot")),
-              (0 until k).map(i => sig(r.getAs[Double](s"m_$i"))))
-        }.toMap
-    }
+    val polyPairs = ErrorAnalysis.pairsIn(s"polygon $polygonName", pts, nPairs, seed)
+    val bboxPts = Seq((s.minX, s.minY), (s.maxX, s.minY), (s.maxX, s.maxY), (s.minX, s.maxY))
+    val rasterPairs = ErrorAnalysis.pairsIn(s"the raster bbox of polygon $polygonName",
+      bboxPts, nPairs, seed)
 
     // ---- polygon scope: bootstrap 16/50/84 over the draw set ----------
-    val drawRows = paramDraws.toIndexedSeq.zipWithIndex.map { case (p, i) =>
-      val (s, r, n) = split(p); (i, s, r, n)
-    }
-    val polyByDraw = propagate(polyPairs, drawRows)
+    val polyByDraw = ErrorAnalysis.corrSigmas(polyPairs, paramDraws.map(model))
     def pctl(sorted: IndexedSeq[Double], q: Double): Double = {
       val pos = q * (sorted.length - 1)
       val lo = pos.toInt; val hi = math.ceil(pos).toInt
@@ -308,9 +249,8 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
       val s = xs.sorted
       Triple(pctl(s, 0.16), pctl(s, 0.50), pctl(s, 0.84))
     }
-    val drawIds = drawRows.map(_._1)
-    val corrTotPoly = band(drawIds.map(polyByDraw(_)._1))
-    val corrCompPoly = (0 until k).map(i => band(drawIds.map(polyByDraw(_)._2(i))))
+    val corrTotPoly = band(polyByDraw.map(_._1))
+    val corrCompPoly = (0 until k).map(i => band(polyByDraw.map(_._2(i))))
 
     // ---- raster scope: point fit + per-parameter 16/84 bound vectors --
     val nParams = 2 * k + (if (ng) 1 else 0)
@@ -320,10 +260,8 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
       }.toArray
     val pointP = (fit.model.sills ++ fit.model.ranges ++
       (if (ng) Seq(fit.model.nugget) else Nil)).toArray
-    val variants = Seq(0 -> pointP, 1 -> paramPctl(0.16), 2 -> paramPctl(0.84))
-    val rasterByVar = propagate(rasterPairs, variants.map { case (i, p) =>
-      val (s, r, n) = split(p); (i, s, r, n)
-    })
+    val rasterByVar = ErrorAnalysis.corrSigmas(rasterPairs,
+      Seq(pointP, paramPctl(0.16), paramPctl(0.84)).map(model))
     def vTriple(f: Int => Double) = Triple(f(1), f(0), f(2))
     val corrTotRaster = vTriple(v => rasterByVar(v)._1)
     val corrCompRaster = (0 until k).map(i => vTriple(v => rasterByVar(v)._2(i)))
@@ -334,7 +272,7 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
       math.sqrt(uncorr * uncorr + t.max * t.max))
 
     UncertaintyReportFull(
-      polygon = polygonName, nPixels = nValid, rms = rms,
+      polygon = polygonName, nPixels = s.n, rms = s.rms,
       areaPolygon = areaPoly, areaRasterBbox = areaBbox,
       areaRasterDetailed = areaDetailed,
       uncorrelated = uncorr,
@@ -345,29 +283,74 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
 }
 
 object ErrorAnalysis {
-  /** THE seeded MC pair generator shared by [[ErrorAnalysis.uncertainty]],
+  /** One Monte-Carlo pair: (x1, y1, x2, y2). */
+  type Pair = (Double, Double, Double, Double)
+
+  /** THE seeded MC pair generator behind [[ErrorAnalysis.uncertainty]],
     * [[ErrorAnalysis.uncertaintyHetero]] and [[ErrorAnalysis.uncertaintyFull]]
-    * (whose σ_corr bootstrap band it feeds): `3·nPairs` bbox-uniform
-    * candidate pairs from the counter RNG (salts seed+1..seed+4), both
-    * endpoints accepted inside the polygon, the first `nPairs` accepted
-    * draw ids kept. Factored out (ADVICE r13) so no caller can re-encode
-    * the seed/headroom/boundary semantics by hand and drift — the band
-    * and the central estimate measure the SAME pairs by construction.
-    * Returns (x1, y1, x2, y2). */
-  def acceptedPairs(spark: SparkSession, pts: Seq[(Double, Double)],
-                    nPairs: Int, seed: Long): DataFrame = {
-    val verts = Geom.polyLit(pts)
-    val (minX, maxX) = (pts.map(_._1).min, pts.map(_._1).max)
-    val (minY, maxY) = (pts.map(_._2).min, pts.map(_._2).max)
-    val u = (salt: Long) => graft.rng.Rand.u01(col("id"), seed + salt)
-    spark.range(nPairs * 3L) // rejection headroom
-      .select(col("id"),
-        (u(1) * (maxX - minX) + minX).as("x1"), (u(2) * (maxY - minY) + minY).as("y1"),
-        (u(3) * (maxX - minX) + minX).as("x2"), (u(4) * (maxY - minY) + minY).as("y2"))
-      .filter(Geom.pointInPolygon(col("x1"), col("y1"), verts) &&
-              Geom.pointInPolygon(col("x2"), col("y2"), verts))
-      .orderBy("id").limit(nPairs) // deterministic accepted-pair set
-      .drop("id")
+    * (whose σ_corr bootstrap band it feeds), run on the driver:
+    * `3·nPairs` bbox-uniform candidate pairs from the counter RNG
+    * ([[Rand.mixLong]], salts seed+1..seed+4, scaled as `u01` is), both
+    * endpoints accepted by the even–odd test [[Geom.inPolygon]], the
+    * first `nPairs` accepted candidate ids kept in id order. One
+    * generator, so the band and the central estimate measure the SAME
+    * pairs by construction. May return fewer than `nPairs` pairs, or
+    * none for a sliver polygon. */
+  def acceptedPairs(pts: Seq[(Double, Double)], nPairs: Int, seed: Long): Array[Pair] = {
+    val xs = pts.map(_._1).toArray
+    val ys = pts.map(_._2).toArray
+    val (minX, maxX) = (xs.min, xs.max)
+    val (minY, maxY) = (ys.min, ys.max)
+    def u(id: Long, salt: Long) = Rand.mixLong(id, seed + salt).toDouble / Rand.M.toDouble
+    (0L until nPairs * 3L).iterator // rejection headroom
+      .map(id => (u(id, 1) * (maxX - minX) + minX, u(id, 2) * (maxY - minY) + minY,
+        u(id, 3) * (maxX - minX) + minX, u(id, 4) * (maxY - minY) + minY))
+      .filter { case (x1, y1, x2, y2) =>
+        Geom.inPolygon(x1, y1, xs, ys) && Geom.inPolygon(x2, y2, xs, ys) }
+      .take(nPairs).toArray
+  }
+
+  /** [[acceptedPairs]] for a named region, which must accept one pair. */
+  private def pairsIn(what: String, pts: Seq[(Double, Double)], nPairs: Int,
+                      seed: Long): Array[Pair] = {
+    val pairs = acceptedPairs(pts, nPairs, seed)
+    require(pairs.nonEmpty, s"$what accepts 0 of ${nPairs * 3L} candidate pairs " +
+      "(a sliver polygon, or too few nPairs)")
+    pairs
+  }
+
+  private def dist(p: Pair): Double =
+    math.sqrt(math.pow(p._3 - p._1, 2) + math.pow(p._4 - p._2, 2))
+
+  /** A correlated σ from a mean covariance, clipped at 0. */
+  private def sigma(meanCov: Double): Double = math.sqrt(math.max(meanCov, 0.0))
+
+  /** The driver loop: for each model, the σ of its mean covariance over
+    * the pairs, total E[σ²_tot − γ(h)] first, then per component i
+    * E[σ²_tot − γ_i(h)], where γ_i keeps component i and the nugget while
+    * σ²_tot stays the model's own total sill (`arrange_params`,
+    * variography_uncertainty.py:1058–1081). */
+  private def corrSigmas(pairs: Array[Pair], models: Seq[SphericalModel])
+      : IndexedSeq[(Double, IndexedSeq[Double])] = {
+    val h = pairs.map(dist)
+    models.toIndexedSeq.map { m =>
+      def sig(g: SphericalModel) = sigma(h.map(m.totalSill - g.gammaTotal(_)).sum / h.length)
+      (sig(m), m.sills.indices.map(i =>
+        sig(SphericalModel(Seq(m.sills(i)), Seq(m.ranges(i)), m.nugget))))
+    }
+  }
+
+  /** Count, RMS and extents of Δz, the one aggregate each report runs. */
+  private case class DzStats(n: Long, rms: Double,
+                             minX: Double, maxX: Double, minY: Double, maxY: Double)
+
+  /** [[DzStats]] of `frame`, which must hold a pixel (`empty` says whose). */
+  private def dzStats(frame: DataFrame, empty: => String): DzStats = {
+    val r = frame.agg(count(lit(1)), sqrt(avg(col("value") * col("value"))),
+      min("x"), max("x"), min("y"), max("y")).head()
+    require(r.getLong(0) > 0, empty)
+    DzStats(r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3),
+      r.getDouble(4), r.getDouble(5))
   }
 }
 

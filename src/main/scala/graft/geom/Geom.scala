@@ -31,25 +31,13 @@ case class PointInPolygon(x: Expression, y: Expression, verts: Expression)
   override def prettyName: String = "point_in_polygon"
 
   override def nullSafeEval(xv: Any, yv: Any, vs: Any): Any = {
-    val px = xv.asInstanceOf[Double]
-    val py = yv.asInstanceOf[Double]
     val arr = vs.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    var inside = false
-    var i = 0
-    var j = n - 1
-    while (i < n) {
-      val vi = arr.getStruct(i, 2); val vj = arr.getStruct(j, 2)
-      val xi = vi.getDouble(0); val yi = vi.getDouble(1)
-      val xj = vj.getDouble(0); val yj = vj.getDouble(1)
-      if ((yi > py) != (yj > py) &&
-          px < (xj - xi) * (py - yi) / (yj - yi) + xi) inside = !inside
-      j = i
-      i += 1
-    }
-    inside
+    val v = Array.tabulate(arr.numElements())(arr.getStruct(_, 2))
+    Geom.inPolygon(xv.asInstanceOf[Double], yv.asInstanceOf[Double],
+      v.map(_.getDouble(0)), v.map(_.getDouble(1)))
   }
 
+  /** The loop of [[Geom.inPolygon]], emitted over the vertex array. */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (px, py, arr) => {
       val n = ctx.freshName("n")
@@ -86,6 +74,20 @@ case class PointInPolygon(x: Expression, y: Expression, verts: Expression)
 
 object Geom {
   import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
+
+  /** The even–odd ray-casting test, driver-side: one definition for
+    * [[PointInPolygon]]'s `eval` and the engine's driver loops. Vertex i
+    * is (xs(i), ys(i)); the ring closes implicitly. */
+  def inPolygon(px: Double, py: Double, xs: Array[Double], ys: Array[Double]): Boolean = {
+    var inside = false
+    var j = xs.length - 1
+    for (i <- xs.indices) {
+      if ((ys(i) > py) != (ys(j) > py) &&
+          px < (xs(j) - xs(i)) * (py - ys(i)) / (ys(j) - ys(i)) + xs(i)) inside = !inside
+      j = i
+    }
+    inside
+  }
 
   /** `vertices` must be `array<struct<x:double,y:double>>`. */
   def pointInPolygon(x: Column, y: Column, vertices: Column): Column =

@@ -450,8 +450,10 @@ object GeoTiff {
     * not every full-res chunk. Every page carries its own geo tags
     * (scaled pixel size, same origin) and chunk layout; `compTag`/
     * `codec` select the chunk compression exactly as in the single-IFD
-    * writers. [[decodeLevel]] reads any page; [[decode]] still reads
-    * IFD0, so pyramided bytes stay drop-in for every level-0 consumer. */
+    * writers, except PackBits: its `codec` is sized for one chunk width,
+    * which the downsampled strip pages do not share. [[decodeLevel]]
+    * reads any page; [[decode]] still reads IFD0, so pyramided bytes stay
+    * drop-in for every level-0 consumer. */
   def encodeOverviews(meta: GridMeta, rows: Array[Array[Double]], bits: Int,
                       tile: Option[(Int, Int)], levels: Seq[Int],
                       compTag: Int = 1,
@@ -460,7 +462,8 @@ object GeoTiff {
     require(levels.nonEmpty && levels.forall(_ > 1) &&
       levels == levels.sorted && levels.distinct == levels,
       s"overview levels must be distinct ascending factors > 1, got $levels")
-    require(compTag == 1 || compTag == 5 || compTag == 8 || compTag == 32773,
+    require(compTag != 32773, "PackBits (32773) is not supported for overview pages")
+    require(compTag == 1 || compTag == 5 || compTag == 8,
       s"unsupported compression tag $compTag")
     write(meta, rows, bits, tile, compTag, codec, levels = levels)
   }

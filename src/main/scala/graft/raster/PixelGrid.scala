@@ -19,7 +19,9 @@ case class GridMeta(
     width: Int = 128,
     height: Int = 128,
     crs: String = "EPSG:32611",
-    nodata: Double = -9999.0)
+    nodata: Double = -9999.0) {
+  require(width > 0 && height > 0, s"grid size ${width}x$height must be positive")
+}
 
 /** The engine's raster data model: a *pixel table*
   * `DataFrame[col:int, row:int, value:double]` holding only VALID pixels

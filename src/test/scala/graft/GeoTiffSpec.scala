@@ -333,6 +333,26 @@ class GeoTiffSpec extends SparkSuite {
     assert(narrow.getMessage.contains("expected 5 cols, got 3"), narrow.getMessage)
   }
 
+  test("encodeOverviews rejects PackBits by name, in strips and in tiles") {
+    // the codec is sized for one page's chunk width, which the
+    // downsampled strip pages do not share
+    val big = GridMeta(width = 37, height = 21)
+    val data = Array.tabulate(21, 37)((r, c) => r * 37.0 + c)
+    for (tile <- Seq(None, Some((16, 16)))) {
+      val e = intercept[IllegalArgumentException](
+        GeoTiff.encodeOverviews(big, data, 64, tile, Seq(2), compTag = 32773,
+          codec = PackBits.encode(_, tile.fold(37)(_._1) * 8)))
+      assert(e.getMessage.contains("PackBits (32773)"), e.getMessage)
+    }
+  }
+
+  test("a zero-width or zero-height grid fails where it is made") {
+    for ((w, h) <- Seq((0, 3), (3, 0), (0, 0), (-1, 4))) {
+      val e = intercept[IllegalArgumentException](GridMeta(width = w, height = h))
+      assert(e.getMessage.contains(s"grid size ${w}x$h"), e.getMessage)
+    }
+  }
+
   // Byte pin: one SHA-256 per public writer over a fixed matrix of grids,
   // layouts, sample widths and nodata sentinels, captured from the
   // writers before they were folded into one page-chain writer. The

@@ -169,14 +169,16 @@ class PlanQualitySpec extends SparkSuite {
     // the counter RNG is one native node with its salt bound by
     // reference: spelled as Column arithmetic each draw copied its subtree
     // 8×, Filter (no CSE) and the bbox prefilter copied the draws again
-    // (678 KB of Java), and per-seed salt literals forced a recompile
+    // (678 KB of Java), and per-seed salt literals forced a recompile.
+    // The engine now draws these pairs on the driver; the stage is kept
+    // as the generator's test oracle, the shape of the u_mc_* draws
     import org.apache.spark.sql.execution.debug.codegenStringSeq
     val prev = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations = prev :+ graft.plans.PipBboxPrefilter
     try {
       val pts = Seq((8.0, 8.0), (56.0, 8.0), (56.0, 56.0), (8.0, 56.0))
       def stages(seed: Long): Seq[String] = codegenStringSeq(
-        graft.api.ErrorAnalysis.acceptedPairs(spark, pts, 5000, seed)
+        AcceptedPairsOracle.frame(spark, pts, 5000, seed)
           .queryExecution.executedPlan).map(_._2)
       val a = stages(1L)
       assert(a.nonEmpty, "acceptedPairs should run whole-stage codegen")
@@ -184,6 +186,34 @@ class PlanQualitySpec extends SparkSuite {
         s"generated stage is ${c.length / 1024} KB"))
       assert(stages(2L) == a, "seed changed the generated source")
     } finally spark.experimental.extraOptimizations = prev
+  }
+
+  test("uncertaintyFull launches only the jobs of its Δz aggregate") {
+    // the pairs, the bootstrap draws and the bound vectors are evaluated
+    // on the driver; the raster-sized work is one count/RMS/extent pass
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graft.JobCounter
+    val dz = spark.range(64L * 64)
+      .select((col("id") % 64).cast("double").as("x"),
+        (col("id") / 64).cast("long").cast("double").as("y"),
+        (graft.rng.Rand.u01(col("id"), 7L) - 0.5).as("value"))
+    val model = graft.functions.SphericalModel(Seq(0.04, 0.02), Seq(9.0, 30.0), 0.005)
+    val fit = graft.fit.VariogramFit.FitResult(model, rss = 0.0, aic = 0.0,
+      nComponents = 2, hasNugget = true)
+    val p = (model.sills ++ model.ranges :+ model.nugget).toArray
+    val draws = Array.tabulate(8)(i => p.map(_ * (1.0 + 0.01 * i)))
+    val ea = new graft.api.ErrorAnalysis(spark, graft.raster.GridMeta(width = 64, height = 64))
+    def full(): Unit = ea.uncertaintyFull(dz, "poly", "POLYGON ((8 8, 56 8, 56 56, 8 56))",
+      fit, draws, nPairs = 2000, seed = 42L)
+    full() // warm: first-use setup must not be counted
+    val aggJobs = JobCounter.jobs(spark.sparkContext) {
+      dz.agg(count(lit(1)), sqrt(avg(col("value") * col("value"))),
+        min("x"), max("x"), min("y"), max("y")).head()
+    }
+    val fullJobs = JobCounter.jobs(spark.sparkContext)(full())
+    assert(aggJobs >= 1)
+    assert(fullJobs == aggJobs,
+      s"uncertaintyFull ran $fullJobs jobs; its Δz aggregate alone runs $aggJobs")
   }
 
   test("Smrf.groundPoints: one shuffle exchange, no cache, nothing registered") {
