@@ -1,12 +1,7 @@
 package graft.geo
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import DatumShift.chain
 
 /** Geodetic datum transformation math — the engine analog of the
   * reference's epoch-aware BOUNDCRS / PROJ datum path
@@ -21,14 +16,6 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * Each step is written once, as a scalar function on doubles
   * ([[Step]]), and a chain of steps runs as native [[DatumShift]]
   * Catalyst nodes, one per output coordinate, inside whole-stage codegen.
-  * It is not Column arithmetic because that form does not compose: the
-  * inverse reuses `p` 7 times, `theta` 6 and `phi` 3, and the forward
-  * reuses `lat` 3 times per output, so one shift spelled as Columns holds
-  * 2,876 / 162 / 8,962 nodes (lat, lon, h) once the analyzer copies every
-  * shared subterm out, and a second shift applied to those Columns in
-  * the same projection holds ~1.9 M / 0.1 M / 5.8 M — the analyzer never
-  * finishes resolving it and exhausts the heap. As nodes, each input
-  * column is read once and a chained shift is a few dozen nodes.
   *
   * Like the UTM gate, the oracle for the full transform is a PINNED
   * artifact computed by an independent numpy-longdouble evaluation
@@ -95,12 +82,6 @@ object Datum {
   val Itrf2014ToGda2020: Helmert14 = Helmert14(
     0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0,
     0.0, 0.0, 0.0, 1.50379e-3, 1.18346e-3, 1.20716e-3, 0.0, 2020.0)
-
-  /** One step of a datum chain: rewrites the coordinate triple `v` in
-    * place (the row's epoch is read only by [[Shift14]]). */
-  sealed trait Step extends Serializable {
-    def apply(v: Array[Double], epoch: Double): Unit
-  }
 
   /** Geodetic (degrees, metres) → geocentric XYZ on `ell`. */
   final case class Geocentric(ell: Ellipsoid) extends Step {
@@ -185,14 +166,6 @@ object Datum {
     }
   }
 
-  /** The three output coordinates of `steps` run over (a, b, c[, epoch]),
-    * each a [[DatumShift]] node; inputs are cast to double. */
-  private def chain(in: Seq[Column], steps: Step*): (Column, Column, Column) = {
-    val kids = in.map(c => toExpr(c.cast("double")))
-    def out(i: Int) = toCol(DatumShift(kids, steps, i))
-    (out(0), out(1), out(2))
-  }
-
   /** Geodetic (degrees, metres) → geocentric XYZ on `ell`. */
   def toGeocentric(lat: Column, lon: Column, h: Column,
                    ell: Ellipsoid): (Column, Column, Column) =
@@ -217,54 +190,4 @@ object Datum {
                   src: Ellipsoid, p: Helmert14, dst: Ellipsoid)
       : (Column, Column, Column) =
     chain(Seq(lat, lon, h, epoch), Geocentric(src), Shift14(p), Geodetic(dst))
-}
-
-/** Output coordinate `coord` (0, 1 or 2) of the datum chain `steps` over
-  * the double inputs (a, b, c[, epoch]); null if any input is null.
-  * `eval` and the generated code both call [[value]], so the interpreted
-  * and compiled paths run the same scalar steps; the steps are bound by
-  * reference, so every chain generates the same source. Each coordinate
-  * runs the whole chain, so projecting all three runs it three times. */
-case class DatumShift(children: Seq[Expression], steps: Seq[Datum.Step], coord: Int)
-    extends Expression {
-  require(children.length == 3 || children.length == 4, "datum chain takes (a, b, c[, epoch])")
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "datum"
-  override def sql: String =
-    s"$prettyName(${children.map(_.sql).mkString(", ")})[$coord]"
-
-  def value(a: Double, b: Double, c: Double, epoch: Double): Double = {
-    val v = Array(a, b, c)
-    steps.foreach(_(v, epoch))
-    v(coord)
-  }
-
-  override def eval(row: InternalRow): Any = {
-    val in = children.map(_.eval(row))
-    if (in.contains(null)) null
-    else {
-      val d = in.map(_.asInstanceOf[Double])
-      value(d(0), d(1), d(2), if (d.length == 4) d(3) else Double.NaN)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val in = children.map(_.genCode(ctx))
-    val ref = ctx.addReferenceObj("datum", this)
-    val args = (in.map(_.value.toString) ++ Seq("java.lang.Double.NaN")).take(4)
-    val call = s"$ref.value(${args.mkString(", ")})"
-    val inputs = in.map(_.code).reduce(_ + _)
-    if (!nullable) ev.copy(code = code"""
-      $inputs
-      double ${ev.value} = $call;""", isNull = FalseLiteral)
-    else ev.copy(code = code"""
-      $inputs
-      boolean ${ev.isNull} = ${in.map(_.isNull.toString).mkString(" || ")};
-      double ${ev.value} = ${ev.isNull} ? 0.0 : $call;""")
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
 }

@@ -9,15 +9,17 @@ import org.apache.spark.sql.functions._
   * the published Krüger series (the same 6th-order-in-n expansion
   * GeographicLib/PROJ evaluate; accuracy ≈ nanometers inside a zone).
   *
-  * Two evaluation paths share the same coefficient constants:
-  * scalar [[forward]]/[[inverse]] for driver-side metadata (zone
-  * centroids, tiepoints) and Column [[forwardCols]]/[[inverseCols]] built
-  * purely from `org.apache.spark.sql.functions` math (sin/cosh/atanh/…),
-  * so projecting a 100-TB point table stays inside whole-stage codegen
-  * with zero UDFs. ProjSpec pins the math by SECOND METHOD: the northing
-  * at the central meridian must equal k0 × the meridian arc integrated
-  * numerically, round trips must close to ~1e-10 rad, and the Column path
-  * must agree with the scalar path bit-for-bit (both run java.lang.Math).
+  * The series is written once, as scalar [[forward]]/[[inverse]].
+  * [[forwardCols]]/[[inverseCols]] run it as [[Forward]]/[[Inverse]]
+  * steps of the [[DatumShift]] node, inside whole-stage codegen with no
+  * UDF. The scalar path keeps the operation order and the semantics of
+  * the Spark-function Column form `r_utm_project` was first gated with —
+  * `StrictMath.log` as Spark's `log`, and `atan2(y + 0.0, x + 0.0)` as
+  * Spark's `atan2` — so the node reproduces that form bit for bit.
+  * ProjSpec pins the math by SECOND METHOD: the northing at the central
+  * meridian must equal k0 × the meridian arc integrated numerically,
+  * round trips must close to ~1e-10 rad, and the poles project to the
+  * meridian arc's end.
   * The query surface (`r_utm_project`) is additionally hash-gated against
   * `tools/utm_expected.parquet`, a pinned artifact produced by a THIRD
   * independent evaluation (numpy 80-bit longdouble, tools/
@@ -95,7 +97,7 @@ object Proj {
     val dLam = math.toRadians(lonDeg - lon0Deg)
     val sinPhi = math.sin(phi)
     val t = math.sinh(atanh(sinPhi) - ecc * atanh(ecc * sinPhi))
-    val xiP = math.atan2(t, math.cos(dLam))
+    val xiP = math.atan2(t + 0.0, math.cos(dLam) + 0.0)
     val etaP = asinh(math.sin(dLam) / math.sqrt(t * t + math.cos(dLam) * math.cos(dLam)))
     var xi = xiP
     var eta = etaP
@@ -116,51 +118,42 @@ object Proj {
       xiP -= beta(j - 1) * math.sin(2.0 * j * xi) * math.cosh(2.0 * j * eta)
       etaP -= beta(j - 1) * math.cos(2.0 * j * xi) * math.sinh(2.0 * j * eta)
     }
-    val dLam = math.atan2(math.sinh(etaP), math.cos(xiP))
-    val chi = math.atan2(math.sin(xiP),
-      math.sqrt(math.sinh(etaP) * math.sinh(etaP) + math.cos(xiP) * math.cos(xiP)))
+    val dLam = math.atan2(math.sinh(etaP) + 0.0, math.cos(xiP) + 0.0)
+    val chi = math.atan2(math.sin(xiP) + 0.0,
+      math.sqrt(math.sinh(etaP) * math.sinh(etaP) + math.cos(xiP) * math.cos(xiP)) + 0.0)
     var phi = chi
     for (j <- 1 to 6) phi += chiToPhi(j - 1) * math.sin(2.0 * j * chi)
     (math.toDegrees(phi), lon0Deg + math.toDegrees(dLam))
   }
 
-  private def atanh(x: Double): Double = 0.5 * math.log((1.0 + x) / (1.0 - x))
-  private def asinh(x: Double): Double = math.log(x + math.sqrt(x * x + 1.0))
+  private def atanh(x: Double): Double = 0.5 * StrictMath.log((1.0 + x) / (1.0 - x))
+  private def asinh(x: Double): Double = StrictMath.log(x + math.sqrt(x * x + 1.0))
 
-  /** Column forward: same series over `functions._` math — stays in
-    * whole-stage codegen (java.lang.Math underneath, so results are
-    * bit-identical to [[forward]]). `lon0Deg` may itself be a Column
-    * (per-row zones). Returns (easting, northing). */
-  def forwardCols(latDeg: Column, lonDeg: Column, lon0Deg: Column): (Column, Column) = {
-    val phi = radians(latDeg)
-    val dLam = radians(lonDeg - lon0Deg)
-    val sinPhi = sin(phi)
-    // column atanh mirrors the scalar definition (0.5·ln((1+x)/(1−x)))
-    def catanh(x: Column): Column = lit(0.5) * log((lit(1.0) + x) / (lit(1.0) - x))
-    def casinh(x: Column): Column = log(x + sqrt(x * x + lit(1.0)))
-    val t = sinh(catanh(sinPhi) - lit(ecc) * catanh(lit(ecc) * sinPhi))
-    val xiP = atan2(t, cos(dLam))
-    val etaP = casinh(sin(dLam) / sqrt(t * t + cos(dLam) * cos(dLam)))
-    val xi = (1 to 6).foldLeft(xiP)((acc, j) =>
-      acc + lit(alpha(j - 1)) * sin(lit(2.0 * j) * xiP) * cosh(lit(2.0 * j) * etaP))
-    val eta = (1 to 6).foldLeft(etaP)((acc, j) =>
-      acc + lit(alpha(j - 1)) * cos(lit(2.0 * j) * xiP) * sinh(lit(2.0 * j) * etaP))
-    (lit(E0) + lit(K0 * RectA) * eta, lit(K0 * RectA) * xi)
+  /** (lat, lon, lon0) → (easting, northing, lon0): [[forward]] as a step. */
+  case object Forward extends Step {
+    def apply(v: Array[Double], epoch: Double): Unit = {
+      val (e, n) = forward(v(0), v(1), v(2)); v(0) = e; v(1) = n
+    }
   }
 
-  /** Column inverse of [[forwardCols]]. Returns (latDeg, lonDeg). */
+  /** (easting, northing, lon0) → (lat, lon, lon0): [[inverse]] as a step. */
+  case object Inverse extends Step {
+    def apply(v: Array[Double], epoch: Double): Unit = {
+      val (lat, lon) = inverse(v(0), v(1), v(2)); v(0) = lat; v(1) = lon
+    }
+  }
+
+  /** Column [[forward]], one [[DatumShift]] node per output. `lon0Deg`
+    * may itself be a Column (per-row zones). Returns (easting, northing). */
+  def forwardCols(latDeg: Column, lonDeg: Column, lon0Deg: Column): (Column, Column) = {
+    val (e, n, _) = DatumShift.chain(Seq(latDeg, lonDeg, lon0Deg), Forward)
+    (e, n)
+  }
+
+  /** Column [[inverse]]. Returns (latDeg, lonDeg). */
   def inverseCols(easting: Column, northing: Column, lon0Deg: Column): (Column, Column) = {
-    val xi = northing / lit(K0 * RectA)
-    val eta = (easting - lit(E0)) / lit(K0 * RectA)
-    val xiP = (1 to 6).foldLeft(xi)((acc, j) =>
-      acc - lit(beta(j - 1)) * sin(lit(2.0 * j) * xi) * cosh(lit(2.0 * j) * eta))
-    val etaP = (1 to 6).foldLeft(eta)((acc, j) =>
-      acc - lit(beta(j - 1)) * cos(lit(2.0 * j) * xi) * sinh(lit(2.0 * j) * eta))
-    val dLam = atan2(sinh(etaP), cos(xiP))
-    val chi = atan2(sin(xiP), sqrt(sinh(etaP) * sinh(etaP) + cos(xiP) * cos(xiP)))
-    val phi = (1 to 6).foldLeft(chi)((acc, j) =>
-      acc + lit(chiToPhi(j - 1)) * sin(lit(2.0 * j) * chi))
-    (degrees(phi), lon0Deg + degrees(dLam))
+    val (lat, lon, _) = DatumShift.chain(Seq(easting, northing, lon0Deg), Inverse)
+    (lat, lon)
   }
 
   /** Per-row UTM zone central meridian as a Column (degrees). */

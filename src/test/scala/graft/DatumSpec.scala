@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjectio
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnTrees
 import org.apache.spark.sql.types.DoubleType
-import graft.geo.{Datum, DatumShift}
+import graft.geo.{Datum, DatumShift, Proj}
 
 class DatumSpec extends SparkSuite {
   import spark.implicits._
@@ -190,7 +190,8 @@ class DatumSpec extends SparkSuite {
         Datum.Geodetic(Datum.Wgs84)),
       Seq(Datum.Geocentric(Datum.Grs80), Datum.Shift14(Datum.Itrf2014ToGda2020),
         Datum.Geodetic(Datum.Grs80)),
-      Seq(Datum.Geocentric(Datum.Wgs84), Datum.Geodetic(Datum.Wgs84)))
+      Seq(Datum.Geocentric(Datum.Wgs84), Datum.Geodetic(Datum.Wgs84)),
+      Seq(Proj.Forward, Proj.Inverse))
     val pts = Seq((51.5, -0.1, 45.0, 2010.0), (-33.86, 151.21, 10.0, 2017.25),
       (0.0, 0.0, 0.0, 2020.0), (89.0, 179.0, 8000.0, 2024.9375),
       (-89.0, -179.0, -100.0, 2015.0), (90.0, -180.0, 0.0, 2020.0))

@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.Try
 import org.apache.spark.sql.DataFrame
 import graft.queries.{QueriesExt, QueriesExt2, QueriesAnn}
 
@@ -15,6 +16,12 @@ class PlanQualitySpec extends SparkSuite {
 
   private def run(qs: Map[String, (org.apache.spark.sql.SparkSession, String) => DataFrame],
                   name: String): String = plan(qs(name)(spark, sf001))
+
+  /** Every catalog query built once at sf0.001, for the catalog-wide walks. */
+  private lazy val catalog: Seq[(String, Try[DataFrame])] =
+    graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> Try(fn(spark, sf001))
+    }
 
   test("x_tfidf: document frequencies broadcast back onto tf (no sort-merge)") {
     val p = run(QueriesExt.queries, "x_tfidf")
@@ -83,8 +90,8 @@ class PlanQualitySpec extends SparkSuite {
       case _ => false
     }
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) {
-      try flatten(fn(spark, sf001).queryExecution.executedPlan).foreach {
+    for ((name, df) <- catalog) {
+      try flatten(df.get.queryExecution.executedPlan).foreach {
         case w: WindowExec if w.partitionSpec.isEmpty && !bounded(w.child) =>
           offenders += s"$name: Window ${w.windowExpression.mkString(",").take(100)}"
         case _ => ()
@@ -94,6 +101,24 @@ class PlanQualitySpec extends SparkSuite {
     }
     assert(offenders.isEmpty,
       s"unbounded whole-table windows (or unplannable queries):\n${offenders.mkString("\n")}")
+  }
+
+  test("plan-size census: every catalog query's optimized plan stays under 2,000 nodes") {
+    // plan nodes plus expression nodes, subqueries included. A formula
+    // spelled as Column arithmetic copies each shared subterm per use, so
+    // its tree grows with every reuse and a second such formula chained
+    // onto it can stall analysis; the largest query today is ~1,100 nodes
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    def nodes(p: LogicalPlan): Int = p.collectWithSubqueries { case n =>
+      1 + n.expressions.map(_.collect { case e => e }.size).sum
+    }.sum
+    val sizes = catalog.map { case (name, df) =>
+      name -> Try(nodes(df.get.queryExecution.optimizedPlan)).toEither
+    }
+    val failed = sizes.collect { case (name, Left(e)) => s"$name: ${e.getMessage}" }
+    val over = sizes.collect { case (name, Right(n)) if n >= 2000 => s"$name: $n nodes" }
+    assert(failed.isEmpty, s"unplannable queries:\n${failed.mkString("\n")}")
+    assert(over.isEmpty, s"optimized plans of 2,000 nodes or more:\n${over.mkString("\n")}")
   }
 
   test("binned range join degrades to a partitioned equi-join when nothing broadcasts") {

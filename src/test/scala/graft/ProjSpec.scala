@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnTrees
 import graft.geo.Proj
 
 class ProjSpec extends SparkSuite {
@@ -61,23 +62,60 @@ class ProjSpec extends SparkSuite {
     }
   }
 
+  private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+
   test("Column path is bit-identical to the scalar path") {
-    val pts = Seq((12.345, -74.1), (-33.9, -77.7), (71.2, -72.25), (0.0, -75.0))
-    val df = pts.toDF("lat", "lon")
-    val (e, n) = Proj.forwardCols(col("lat"), col("lon"), lit(-75.0))
-    val (lat2, lon2) = Proj.inverseCols(e, n, lit(-75.0))
-    val got = df.select(e.as("e"), n.as("n"), lat2.as("la"), lon2.as("lo")).collect()
+    // four points in zone 18 (lon0 = −75°), then a seeded sample across zones
+    val rng = new scala.util.Random(20261019L)
+    val pts = Seq((12.345, -74.1), (-33.9, -77.7), (71.2, -72.25), (0.0, -75.0)) ++
+      Seq.fill(500)((rng.nextDouble() * 168.0 - 84.0, rng.nextDouble() * 360.0 - 180.0))
+    val lon0 = Proj.centralMeridianCol(col("lon"))
+    val (e, n) = Proj.forwardCols(col("lat"), col("lon"), lon0)
+    val (lat2, lon2) = Proj.inverseCols(e, n, lon0)
+    val got = pts.toDF("lat", "lon").select(e, n, lat2, lon2).collect()
     for (((lat, lon), row) <- pts.zip(got)) {
-      val (se, sn) = Proj.forward(lat, lon, -75.0)
-      val (sla, slo) = Proj.inverse(se, sn, -75.0)
-      assert(java.lang.Double.doubleToLongBits(row.getDouble(0)) ==
-        java.lang.Double.doubleToLongBits(se), s"easting($lat,$lon)")
-      assert(java.lang.Double.doubleToLongBits(row.getDouble(1)) ==
-        java.lang.Double.doubleToLongBits(sn), s"northing($lat,$lon)")
-      assert(java.lang.Double.doubleToLongBits(row.getDouble(2)) ==
-        java.lang.Double.doubleToLongBits(sla), s"lat($lat,$lon)")
-      assert(java.lang.Double.doubleToLongBits(row.getDouble(3)) ==
-        java.lang.Double.doubleToLongBits(slo), s"lon($lat,$lon)")
+      val z = Proj.centralMeridian(lon)
+      val (se, sn) = Proj.forward(lat, lon, z)
+      val (sla, slo) = Proj.inverse(se, sn, z)
+      for ((want, i) <- Seq(se, sn, sla, slo).zipWithIndex)
+        assert(bits(row.getDouble(i)) == bits(want), s"output $i at ($lat, $lon), lon0 $z")
+    }
+  }
+
+  test("inverse chained onto forward in one projection is a small tree") {
+    // each Column is one node per output, so chaining does not copy the
+    // forward series into every use by the inverse
+    val (e, n) = Proj.forwardCols(col("lat"), col("lon"), col("lon0"))
+    val (lat2, lon2) = Proj.inverseCols(e, n, col("lon0"))
+    val built = Seq(lat2, lon2).map(ColumnTrees.nodes(_, 1000)).sum
+    assert(built < 1000, s"$built nodes as built")
+    val rng = new scala.util.Random(42)
+    val pts = Seq.fill(300) {
+      val lon0 = (rng.nextInt(60) * 6 - 180 + 3).toDouble
+      (rng.nextDouble() * 168.0 - 84.0, lon0 + rng.nextDouble() * 6.0 - 3.0, lon0)
+    }
+    val rt = pts.toDF("lat", "lon", "lon0")
+      .select(col("lat"), col("lon"), lat2.as("lat2"), lon2.as("lon2"))
+    val analyzed = rt.queryExecution.analyzed.expressions
+      .map(_.collect { case x => x }.size).sum
+    assert(analyzed < 1000, s"$analyzed nodes after analysis")
+    rt.collect().foreach { r =>
+      assert(math.abs(r.getDouble(2) - r.getDouble(0)) < 1e-9 &&
+        math.abs(r.getDouble(3) - r.getDouble(1)) < 1e-9, s"round trip: $r")
+    }
+  }
+
+  test("both poles project to the end of the meridian arc") {
+    // atanh(sin φ) is ±∞ here: 1 − sin φ = 0 at +90° and log's argument
+    // is 0 at −90°, and the series must still reach ±π/2
+    val pts = for (lat <- Seq(90.0, -90.0); lon <- Seq(-75.0, -73.5, -77.9)) yield (lat, lon)
+    val (e, n) = Proj.forwardCols(col("lat"), col("lon"), lit(-75.0))
+    val got = pts.toDF("lat", "lon").select(e, n).collect()
+    val arcEnd = Proj.K0 * Proj.RectA * math.Pi / 2.0
+    for (((lat, lon), r) <- pts.zip(got)) {
+      assert(math.abs(r.getDouble(0) - Proj.E0) < 1e-3, s"easting at ($lat, $lon): $r")
+      assert(math.abs(r.getDouble(1) - math.signum(lat) * arcEnd) < 1e-3,
+        s"northing at ($lat, $lon): $r")
     }
   }
 
