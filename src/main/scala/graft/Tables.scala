@@ -1,16 +1,70 @@
 package graft
 
+import scala.collection.mutable
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
 
 /** Loaders for the driver-provided parquet corpus (TESTDATA.md).
   * Every query takes `(spark, sfDir)` and reads only these tables, so the
   * same query runs unchanged at sf0.001 / 0.01 / 0.1 (and, by design, on a
   * partitioned 100-TB layout: all downstream operators are pure DataFrame
   * pipelines with no driver-side materialization of table-sized data).
+  *
+  * Each table is resolved once per session. `spark.read.parquet` runs a
+  * Spark job to infer the schema from the footer and lists the files, on
+  * every call; in a long session that read was the largest fixed cost of
+  * a warm catalog query. So [[read]] keeps the resolved relation (schema
+  * and file index) of each path, and builds every call's DataFrame from it
+  * with `baseRelationToDataFrame`: each call still gets a fresh
+  * `LogicalRelation` with new attribute IDs, so self-joins of one table
+  * stay unambiguous. The relation is keyed on the absolute path and on
+  * the length and modification time of each file under it (the file
+  * itself, or the part files of a directory table), stat-ed on every
+  * call: a rewritten table changes its key and is inferred again, with
+  * its new schema. The cache holds one relation per path and the
+  * relations of one session, the last that read; a relation carries the
+  * session whose conf plans its scans, so a second session resolves its
+  * own.
   */
 object Tables {
+  /** A path's resolved relation and the (file, length, mtime) stamps it
+    * was resolved from. */
+  private final case class Resolved(stamp: Seq[(String, Long, Long)], relation: BaseRelation)
+
+  private var session: SparkSession = _
+  private val resolved = mutable.Map.empty[String, Resolved]
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** The parquet file or directory at `path`, resolved once per session
+    * and file stamp (see the object doc). */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = fs.makeQualified(p).toString
+    val stamp = {
+      val it = fs.listFiles(p, true)
+      val b = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      b.result()
+    }
+    val relation = synchronized {
+      if (session ne spark) { session = spark; resolved.clear() }
+      resolved.get(key).filter(_.stamp == stamp).map(_.relation).getOrElse {
+        val r = spark.read.parquet(path).queryExecution.analyzed
+          .collectFirst { case l: LogicalRelation => l.relation }.get
+        resolved(key) = Resolved(stamp, r)
+        r
+      }
+    }
+    spark.baseRelationToDataFrame(relation)
+  }
 
   /** The driver's events.parquet has shipped `ts` in two physical forms
     * across corpus generations: TIMESTAMP(NANOS) (no native Spark type —
@@ -21,8 +75,9 @@ object Tables {
     * column so every downstream surface — watermarks, `unix_micros`,
     * `Row.getTimestamp` — sees one type regardless of corpus vintage. The
     * NTZ→TZ cast under the UTC session zone relabels the same wall-clock
-    * instant DuckDB reads, so oracle parity is unchanged. */
-  private def normTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
+    * instant DuckDB reads, so oracle parity is unchanged. Batch and
+    * streaming events frames both go through here. */
+  private[graft] def normTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
     case org.apache.spark.sql.types.LongType =>
       df.withColumn("ts",
         org.apache.spark.sql.functions.timestamp_micros(

@@ -3,11 +3,12 @@ package graft.geo
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 
-/** CRS / vertical-datum metadata handling (SURVEY.md §2.2 reprojection
-  * row, §7.5): the engine treats CRS as grid-sidecar METADATA — the test
-  * environment has no PROJ, so coordinate math is pass-through and datum
-  * logic reduces to key normalization + lookup, exactly the shape of the
-  * reference's `_GEOID_MAP` dispatch (differencing_functions.py:2143–2237).
+/** CRS / vertical-datum naming (SURVEY.md §2.2 reprojection row, §7.5):
+  * geoid-model key normalization + lookup, exactly the shape of the
+  * reference's `_GEOID_MAP` dispatch (differencing_functions.py:2143–2237),
+  * compound-CRS strings and the UTM EPSG code of a centroid. This object
+  * only names CRSs; the coordinate math the reference delegates to PROJ
+  * lives in [[Proj]] (UTM) and [[Datum]]/[[DatumShift]] (Helmert shifts).
   */
 object Crs {
 
@@ -52,7 +53,7 @@ object Crs {
     * 1614–1622): zone = floor((lon+180)/6)+1, EPSG 326xx north / 327xx
     * south. */
   def utmEpsgFor(lon: Double, lat: Double): String = {
-    val zone = math.min(60, math.max(1, (math.floor((lon + 180.0) / 6.0) + 1).toInt))
+    val zone = Proj.zone(lon)
     if (lat >= 0) f"326$zone%02d" else f"327$zone%02d"
   }
 }

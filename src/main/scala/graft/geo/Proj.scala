@@ -33,7 +33,6 @@ object Proj {
   val FLAT = 1.0 / 298.257223563
   val K0 = 0.9996
   val E0 = 500000.0
-  val N0_SOUTH = 10000000.0
 
   private val n = FLAT / (2.0 - FLAT)
   private val n2 = n * n
@@ -82,16 +81,17 @@ object Proj {
     4174.0 * n5 / 315.0 - 144838.0 * n6 / 6237.0,
     601676.0 * n6 / 22275.0)
 
+  /** UTM zone (1–60) of a longitude: floor((lon+180)/6)+1, clamped. */
+  def zone(lonDeg: Double): Int =
+    math.min(60, math.max(1, (math.floor((lonDeg + 180.0) / 6.0) + 1).toInt))
+
   /** UTM central meridian (degrees) for a longitude. */
-  def centralMeridian(lonDeg: Double): Double = {
-    val zone = math.min(60, math.max(1, (math.floor((lonDeg + 180.0) / 6.0) + 1).toInt))
-    (zone - 1) * 6.0 - 180.0 + 3.0
-  }
+  def centralMeridian(lonDeg: Double): Double = (zone(lonDeg) - 1) * 6.0 - 180.0 + 3.0
 
   /** Scalar forward: (latDeg, lonDeg) → (easting, northing) for the zone
     * with central meridian `lon0Deg`; northing is the northern-hemisphere
-    * convention (negative south of the equator unless the caller adds
-    * [[N0_SOUTH]]). */
+    * convention (negative south of the equator unless the caller adds the
+    * 10,000,000 m southern false northing). */
   def forward(latDeg: Double, lonDeg: Double, lon0Deg: Double): (Double, Double) = {
     val phi = math.toRadians(latDeg)
     val dLam = math.toRadians(lonDeg - lon0Deg)

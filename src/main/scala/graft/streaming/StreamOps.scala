@@ -188,13 +188,8 @@ object StreamOps {
     * parquet files (Spark's FileStreamSource contract — new files appended
     * there enter the stream). Used by StreamSpec via the memory sink. */
   def hourlyAggStream(spark: SparkSession, eventsDir: String): DataFrame = {
-    val schema = spark.read.parquet(eventsDir).schema
-    val raw = spark.readStream.schema(schema).parquet(eventsDir)
-    // nanos ts arrives as long under nanosAsLong; restore micros timestamp
-    val events =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
+    val schema = graft.Tables.read(spark, eventsDir).schema
+    val events = graft.Tables.normTs(spark.readStream.schema(schema).parquet(eventsDir))
     hourlyAgg(events.withWatermark("ts", "1 hour"))
   }
 }

@@ -241,6 +241,25 @@ class PlanQualitySpec extends SparkSuite {
       s"uncertaintyFull ran $fullJobs jobs; its Δz aggregate alone runs $aggJobs")
   }
 
+  test("job census: a warm rerun of each ranked query launches only its own jobs") {
+    // the most frequent query_mix queries, with the jobs a warm rerun
+    // (build + noop write) launches once each table is resolved per
+    // session; a per-read schema-inference job adds one per table read
+    import org.apache.spark.sql.graft.JobCounter
+    val bounds = Seq("m_kappa" -> 2, "w_rank_funcs" -> 2, "w_lag_lead" -> 2,
+      "x_dedup_containment" -> 3, "o_pick_index" -> 1, "r_hypso_bands" -> 3)
+    def once(name: String): Unit =
+      graft.SparkEntry.queries(name)(spark, sf001).write.format("noop").mode("overwrite").save()
+    val counts = bounds.map { case (name, _) =>
+      once(name)
+      name -> JobCounter.jobs(spark.sparkContext)(once(name))
+    }
+    val over = counts.zip(bounds).collect { case ((name, n), (_, b)) if n > b =>
+      s"$name: $n jobs (bound $b)" }
+    assert(over.isEmpty, s"warm reruns over their job bound:\n${over.mkString("\n")}" +
+      s"\nall: ${counts.mkString(", ")}")
+  }
+
   test("Smrf.groundPoints: one shuffle exchange, no cache, nothing registered") {
     // the halo-tile kernel routes each point to its tiles in one exchange
     // and consumes it once; the aggregate-and-join form persisted the
