@@ -240,14 +240,10 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
 
     // ---- polygon scope: bootstrap 16/50/84 over the draw set ----------
     val polyByDraw = ErrorAnalysis.corrSigmas(polyPairs, paramDraws.map(model))
-    def pctl(sorted: IndexedSeq[Double], q: Double): Double = {
-      val pos = q * (sorted.length - 1)
-      val lo = pos.toInt; val hi = math.ceil(pos).toInt
-      sorted(lo) + (sorted(hi) - sorted(lo)) * (pos - lo)
-    }
+    import VariogramFit.percentile
     def band(xs: IndexedSeq[Double]): Triple = {
       val s = xs.sorted
-      Triple(pctl(s, 0.16), pctl(s, 0.50), pctl(s, 0.84))
+      Triple(percentile(s, 0.16), percentile(s, 0.50), percentile(s, 0.84))
     }
     val corrTotPoly = band(polyByDraw.map(_._1))
     val corrCompPoly = (0 until k).map(i => band(polyByDraw.map(_._2(i))))
@@ -256,7 +252,7 @@ class ErrorAnalysis(spark: SparkSession, meta: GridMeta = GridMeta()) {
     val nParams = 2 * k + (if (ng) 1 else 0)
     def paramPctl(q: Double): Array[Double] =
       (0 until nParams).map { j =>
-        pctl(paramDraws.map(_(j)).sorted.toIndexedSeq, q)
+        percentile(paramDraws.map(_(j)).sorted, q)
       }.toArray
     val pointP = (fit.model.sills ++ fit.model.ranges ++
       (if (ng) Seq(fit.model.nugget) else Nil)).toArray

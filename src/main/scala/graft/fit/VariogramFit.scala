@@ -177,13 +177,18 @@ object VariogramFit {
     val fits = bootstrapFits(spark, bins, sigmas, best, nBoot, seed)
     fits.head.indices.map { i =>
       val vals = fits.map(_(i)).sorted
-      def pct(q: Double): Double = {
-        val pos = q * (vals.length - 1)
-        val lo = math.floor(pos).toInt; val hi = math.ceil(pos).toInt
-        vals(lo) + (vals(hi) - vals(lo)) * (pos - lo)
-      }
-      paramName(i, k, ng) -> ((pct(0.16), pct(0.5), pct(0.84)))
+      paramName(i, k, ng) ->
+        ((percentile(vals, 0.16), percentile(vals, 0.5), percentile(vals, 0.84)))
     }.toMap
+  }
+
+  /** The `q`-quantile of ascending `sorted`, linearly interpolated
+    * between the order statistics at `floor` and `ceil` of
+    * `q * (n - 1)`. */
+  def percentile(sorted: collection.IndexedSeq[Double], q: Double): Double = {
+    val pos = q * (sorted.length - 1)
+    val lo = math.floor(pos).toInt; val hi = math.ceil(pos).toInt
+    sorted(lo) + (sorted(hi) - sorted(lo)) * (pos - lo)
   }
 
   private def paramName(i: Int, k: Int, ng: Boolean): String =

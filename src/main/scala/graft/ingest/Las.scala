@@ -4,12 +4,16 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Minimal PURE-JVM LAS 1.2 point-cloud codec — the byte boundary the
-  * reference hands to PDAL pipelines (`differencing_functions.py:738–828`).
-  * Covers point data record formats 0 and 1 (X/Y/Z scaled int32 +
-  * classification; format 1 appends the 8-byte double GPS time), which
-  * carry every dimension the reference's crop/noise/ground/grid
-  * workflow touches.
+/** Pure-JVM raw LAS point-cloud codec: the uncompressed byte boundary
+  * the reference hands to PDAL pipelines (`differencing_functions.py:738–828`).
+  * Covers LAS 1.2 point data record formats 0 and 1 (X/Y/Z scaled int32
+  * + classification; format 1 appends the 8-byte double GPS time) and
+  * LAS 1.4 format 6, which carry every dimension the reference's
+  * crop/noise/ground/grid workflow touches. The compressed twins are
+  * [[Laz]] (LAZ POINT10/GPSTIME11, formats 0/1) and [[Laz14]] (LAZ
+  * POINT14, format 6). The header block, the point records and
+  * quantization of all three live in [[LasContainer]], whose writers'
+  * output bytes `LasContainerSpec` pins by SHA-256.
   *
   * Coordinates are stored LAS-style as `round(v / scale)` int32 with the
   * scale/offset recorded in the header; the writer uses scale 1e-6 and
@@ -22,10 +26,9 @@ import org.apache.spark.sql.functions._
   * into the point model ([[tilesToPoints]]).
   */
 object Las {
+  import LasContainer.{Summary, headerSize, putRecord01, putRecord6, recordLength}
 
-  private val HEADER_SIZE = 227
-  private val POINT_LEN = 20
-  val Scale = 1e-6
+  val Scale: Double = LasContainer.Scale
 
   /** (x, y, z, classification) points → LAS 1.2 format-0 bytes. */
   def encode(points: Array[(Double, Double, Double, Int)]): Array[Byte] =
@@ -39,48 +42,13 @@ object Las {
 
   private def encodeImpl(points: Array[(Double, Double, Double, Int, Double)],
                          fmt: Int): Array[Byte] = {
-    val n = points.length
-    val recLen = if (fmt == 1) POINT_LEN + 8 else POINT_LEN
-    val b = ByteBuffer.allocate(HEADER_SIZE + recLen * n)
+    val b = ByteBuffer.allocate(headerSize(fmt) + recordLength(fmt) * points.length)
       .order(ByteOrder.LITTLE_ENDIAN)
-    def quant(v: Double): Int = {
-      val q = math.floor(v / Scale + 0.5)
-      require(q >= Int.MinValue && q <= Int.MaxValue,
-        s"coordinate $v overflows int32 at scale $Scale")
-      q.toInt
-    }
-    b.put("LASF".getBytes("US-ASCII")) // 0: file signature
-    b.putShort(0.toShort) // 4: file source id
-    b.putShort(0.toShort) // 6: global encoding
-    b.position(24)
-    b.put(1.toByte).put(2.toByte) // version 1.2
-    b.position(94)
-    b.putShort(HEADER_SIZE.toShort) // header size
-    b.putInt(HEADER_SIZE) // offset to point data
-    b.putInt(0) // number of VLRs
-    b.put(fmt.toByte) // point data format
-    b.putShort(recLen.toShort)
-    b.putInt(n)
-    b.position(131)
-    b.putDouble(Scale).putDouble(Scale).putDouble(Scale)
-    b.putDouble(0.0).putDouble(0.0).putDouble(0.0) // x/y/z offset
-    def minMax(f: ((Double, Double, Double, Int, Double)) => Double): (Double, Double) =
-      if (n == 0) (0.0, 0.0)
-      else (points.map(f).max, points.map(f).min)
-    val (xmax, xmin) = minMax(_._1)
-    val (ymax, ymin) = minMax(_._2)
-    val (zmax, zmin) = minMax(_._3)
-    b.putDouble(xmax).putDouble(xmin).putDouble(ymax)
-      .putDouble(ymin).putDouble(zmax).putDouble(zmin)
-    b.position(HEADER_SIZE)
-    points.foreach { case (x, y, z, cls, t) =>
-      b.putInt(quant(x)).putInt(quant(y)).putInt(quant(z))
-      b.putShort(0.toShort) // intensity
-      b.put(0x11.toByte) // return 1 of 1
-      b.put(cls.toByte)
-      b.put(0.toByte).put(0.toByte).putShort(0.toShort) // angle/user/source
-      if (fmt == 1) b.putDouble(t)
-    }
+    val s = new Summary
+    points.foreach(p => s.add(p._1, p._2, p._3, 1))
+    s.putHeader(b, fmt, compressed = false, headerSize(fmt), numVlrs = 0)
+    b.position(headerSize(fmt))
+    points.foreach { case (x, y, z, cls, t) => putRecord01(b, fmt == 1, x, y, z, cls, t) }
     b.array()
   }
 
@@ -93,29 +61,15 @@ object Las {
   /** Like [[decode]] but keeps the GPS time channel: format-1 records
     * yield their stored double, format-0 records yield 0.0. */
   def decodeTimed(bytes: Array[Byte]): Array[(Double, Double, Double, Int, Double)] = {
+    val h = LasContainer.raw(bytes, v14 = false)
     val b = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(bytes.length >= HEADER_SIZE &&
-      new String(bytes, 0, 4, "US-ASCII") == "LASF", "not a LAS file")
-    val fmt = b.get(104) & 0xff
-    require(fmt == 0 || fmt == 1, s"only point formats 0/1 supported, got $fmt")
-    val dataOff = b.getInt(96)
-    val recLen = b.getShort(105) & 0xffff
-    val n = b.getInt(107)
-    val minRec = if (fmt == 1) POINT_LEN + 8 else POINT_LEN
-    // same hostile-input discipline as decode14: every arithmetic input is
-    // range-checked in Long math before it sizes an allocation or an index
-    require(n >= 0 && dataOff >= HEADER_SIZE && recLen >= minRec &&
-      dataOff + n.toLong * recLen <= bytes.length,
-      s"$n points of $recLen bytes at $dataOff run past file end")
-    val sx = b.getDouble(131); val sy = b.getDouble(139); val sz = b.getDouble(147)
-    val ox = b.getDouble(155); val oy = b.getDouble(163); val oz = b.getDouble(171)
-    Array.tabulate(n) { i =>
-      val p = dataOff + i * recLen
-      (b.getInt(p) * sx + ox,
-        b.getInt(p + 4) * sy + oy,
-        b.getInt(p + 8) * sz + oz,
-        bytes(p + 15) & 0xff,
-        if (fmt == 1) b.getDouble(p + 20) else 0.0)
+    Array.tabulate(h.n) { i =>
+      val p = h.record(i)
+      (b.getInt(p) * h.sx + h.ox,
+        b.getInt(p + 4) * h.sy + h.oy,
+        b.getInt(p + 8) * h.sz + h.oz,
+        bytes(p + h.clsAt) & 0xff,
+        if (h.fmt == 1) b.getDouble(p + h.timeAt) else 0.0)
     }
   }
 
@@ -131,8 +85,6 @@ object Las {
   // units, and an ALWAYS-present f64 GPS time (adjusted standard epoch,
   // global-encoding bit 0).
 
-  private val HEADER14_SIZE = 375
-  private val POINT6_LEN = 30
   private val EVLR_HDR = 60
 
   /** One format-6 point. `scanAngle` is the raw i16 (0.006° units);
@@ -146,71 +98,20 @@ object Las {
     * LAS 1.4 format-6 bytes. */
   def encode14(points: Array[P6],
                evlrs: Seq[(String, Int, Array[Byte])] = Nil): Array[Byte] = {
-    val n = points.length
-    points.foreach { p =>
-      require(p.returnNo >= 1 && p.returnNo <= 15 &&
-        p.nReturns >= p.returnNo && p.nReturns <= 15,
-        s"return ${p.returnNo}/${p.nReturns} outside fmt-6 4-bit fields")
-      require(p.channel >= 0 && p.channel <= 3, s"scanner channel ${p.channel}")
-      require(p.classification >= 0 && p.classification <= 255,
-        s"classification ${p.classification}")
-      require(p.intensity >= 0 && p.intensity <= 0xffff &&
-        p.sourceId >= 0 && p.sourceId <= 0xffff, "u16 field out of range")
-      require(p.scanAngle >= Short.MinValue && p.scanAngle <= Short.MaxValue,
-        s"scan angle ${p.scanAngle}")
-    }
+    points.foreach(LasContainer.checkRecord6)
     val evlrBytes = evlrs.map { case (uid, _, data) =>
       require(uid.getBytes("US-ASCII").length <= 16, s"user id '$uid' > 16")
       EVLR_HDR + data.length
     }.sum
-    val b = ByteBuffer.allocate(HEADER14_SIZE + POINT6_LEN * n + evlrBytes)
+    val dataEnd = headerSize(6) + recordLength(6).toLong * points.length
+    val b = ByteBuffer.allocate(dataEnd.toInt + evlrBytes)
       .order(ByteOrder.LITTLE_ENDIAN)
-    def quant(v: Double): Int = {
-      val q = math.floor(v / Scale + 0.5)
-      require(q >= Int.MinValue && q <= Int.MaxValue,
-        s"coordinate $v overflows int32 at scale $Scale")
-      q.toInt
-    }
-    b.put("LASF".getBytes("US-ASCII"))
-    b.putShort(4, 0.toShort)          // file source id
-    b.putShort(6, 1.toShort)          // global encoding: adjusted std GPS time
-    b.put(24, 1.toByte); b.put(25, 4.toByte) // version 1.4
-    b.putShort(94, HEADER14_SIZE.toShort)
-    b.putInt(96, HEADER14_SIZE)       // offset to point data
-    b.putInt(100, 0)                  // number of (legacy-position) VLRs
-    b.put(104, 6.toByte)              // point data record format
-    b.putShort(105, POINT6_LEN.toShort)
-    b.putInt(107, 0)                  // LEGACY point count: 0 for fmt >= 6
-    // legacy by-return counts 111..130 stay 0
-    b.position(131)
-    b.putDouble(Scale).putDouble(Scale).putDouble(Scale)
-    b.putDouble(0.0).putDouble(0.0).putDouble(0.0)
-    def mm(f: P6 => Double): (Double, Double) =
-      if (n == 0) (0.0, 0.0) else (points.map(f).max, points.map(f).min)
-    val (xmax, xmin) = mm(_.x); val (ymax, ymin) = mm(_.y)
-    val (zmax, zmin) = mm(_.z)
-    b.putDouble(xmax).putDouble(xmin).putDouble(ymax)
-      .putDouble(ymin).putDouble(zmax).putDouble(zmin)
-    b.putLong(227, 0L)                // waveform packet start
-    b.putLong(235,
-      if (evlrs.isEmpty) 0L else (HEADER14_SIZE + POINT6_LEN.toLong * n))
-    b.putInt(243, evlrs.length)
-    b.putLong(247, n.toLong)          // number of point records (u64)
-    points.groupBy(_.returnNo).foreach { case (r, ps) =>
-      b.putLong(255 + 8 * (r - 1), ps.length.toLong)
-    }
-    b.position(HEADER14_SIZE)
-    points.foreach { p =>
-      b.putInt(quant(p.x)).putInt(quant(p.y)).putInt(quant(p.z))
-      b.putShort(p.intensity.toShort)
-      b.put((p.returnNo | (p.nReturns << 4)).toByte)
-      b.put((p.channel << 4).toByte)  // class flags 0, scan dir/edge 0
-      b.put(p.classification.toByte)
-      b.put(0.toByte)                 // user data
-      b.putShort(p.scanAngle.toShort)
-      b.putShort(p.sourceId.toShort)
-      b.putDouble(p.gpsTime)
-    }
+    val s = new Summary
+    points.foreach(p => s.add(p.x, p.y, p.z, p.returnNo))
+    s.putHeader(b, 6, compressed = false, headerSize(6), numVlrs = 0,
+      evlrStart = if (evlrs.isEmpty) 0L else dataEnd, nEvlr = evlrs.length)
+    b.position(headerSize(6))
+    points.foreach(putRecord6(b, _))
     evlrs.foreach { case (uid, rid, data) =>
       val hdrStart = b.position()
       b.putShort(0.toShort)           // reserved
@@ -227,45 +128,13 @@ object Las {
   /** LAS 1.4 format-6 bytes → (points, extended VLRs). Corrupt input
     * throws IllegalArgumentException by name. */
   def decode14(bytes: Array[Byte]): (Array[P6], Seq[(String, Int, Array[Byte])]) = {
-    require(bytes.length >= HEADER14_SIZE &&
-      new String(bytes, 0, 4, "US-ASCII") == "LASF", "not a LAS file")
+    val h = LasContainer.raw(bytes, v14 = true)
     val b = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val (vMaj, vMin) = (bytes(24) & 0xff, bytes(25) & 0xff)
-    require(vMaj == 1 && vMin >= 4, s"not a LAS 1.4+ file (version $vMaj.$vMin)")
-    require((b.getShort(94) & 0xffff) >= HEADER14_SIZE,
-      s"LAS 1.4 header size ${b.getShort(94)} < $HEADER14_SIZE")
-    val fmt = bytes(104) & 0x3f       // high bits flag LAZ compression
-    require(fmt == 6, s"only point format 6 supported for LAS 1.4, got $fmt")
-    val recLen = b.getShort(105) & 0xffff
-    require(recLen >= POINT6_LEN, s"fmt-6 record length $recLen < $POINT6_LEN")
-    require(b.getInt(107) == 0, "legacy point count must be 0 for fmt 6")
-    val n64 = b.getLong(247)
-    val dataOff = b.getInt(96)
-    require(n64 >= 0 && n64 <= Int.MaxValue &&
-      dataOff >= HEADER14_SIZE &&
-      dataOff + n64 * recLen <= bytes.length,
-      s"$n64 points of $recLen bytes at $dataOff run past file end")
-    val n = n64.toInt
-    val sx = b.getDouble(131); val sy = b.getDouble(139); val sz = b.getDouble(147)
-    val ox = b.getDouble(155); val oy = b.getDouble(163); val oz = b.getDouble(171)
-    val pts = Array.tabulate(n) { i =>
-      val p = dataOff + i * recLen
-      val ret = bytes(p + 14) & 0xff
-      val flags = bytes(p + 15) & 0xff
-      P6(b.getInt(p) * sx + ox, b.getInt(p + 4) * sy + oy,
-        b.getInt(p + 8) * sz + oz,
-        b.getShort(p + 12) & 0xffff,
-        ret & 0x0f, (ret >> 4) & 0x0f, (flags >> 4) & 0x03,
-        bytes(p + 16) & 0xff,
-        b.getShort(p + 18).toInt,
-        b.getShort(p + 20) & 0xffff,
-        b.getDouble(p + 22))
-    }
-    val nEvlr = b.getInt(243)
-    var off = b.getLong(235)
-    require(nEvlr == 0 || (off >= dataOff + n64 * recLen &&
+    val pts = Array.tabulate(h.n)(i => LasContainer.readRecord6(bytes, b, h, h.record(i)))
+    var off = h.evlrStart
+    require(h.nEvlr == 0 || (off >= h.dataOff + h.n.toLong * h.recLen &&
       off <= bytes.length - EVLR_HDR), s"EVLR start $off outside file")
-    val evlrs = (0 until nEvlr).map { _ =>
+    val evlrs = (0 until h.nEvlr).map { _ =>
       val o = off.toInt
       require(o + EVLR_HDR <= bytes.length, "truncated EVLR header")
       val uid = new String(bytes, o + 2, 16, "US-ASCII").takeWhile(_ != '\u0000')
@@ -308,115 +177,39 @@ object Las {
   // zero-filled header, append fixed-size records as rows arrive, and
   // BACK-PATCH the header in finish() — O(1) task memory at any size.
 
-  /** Streaming LAS 1.2 format-1 writer over a seekable channel. */
-  final class StreamWriter12(ch: java.nio.channels.SeekableByteChannel) {
-    private val rec = ByteBuffer.allocate(POINT_LEN + 8).order(ByteOrder.LITTLE_ENDIAN)
-    private var n = 0
-    private var xmin, ymin, zmin = Double.MaxValue
-    private var xmax, ymax, zmax = Double.MinValue
-    ch.position(HEADER_SIZE.toLong)
-    private def quant(v: Double): Int = {
-      val q = math.floor(v / Scale + 0.5)
-      require(q >= Int.MinValue && q <= Int.MaxValue,
-        s"coordinate $v overflows int32 at scale $Scale")
-      q.toInt
-    }
+  /** Streaming writer over a seekable channel: appends point-format
+    * `fmt` records as rows arrive and back-patches the header in
+    * [[finish]], which leaves the channel open. */
+  sealed abstract class StreamWriter(ch: java.nio.channels.SeekableByteChannel, fmt: Int) {
+    private val rec = ByteBuffer.allocate(recordLength(fmt)).order(ByteOrder.LITTLE_ENDIAN)
+    private val s = new Summary
+    ch.position(headerSize(fmt).toLong)
     def add(x: Double, y: Double, z: Double, cls: Int, t: Double): Unit = {
       rec.clear()
-      rec.putInt(quant(x)).putInt(quant(y)).putInt(quant(z))
-      rec.putShort(0.toShort).put(0x11.toByte).put(cls.toByte)
-      rec.put(0.toByte).put(0.toByte).putShort(0.toShort)
-      rec.putDouble(t)
+      if (fmt == 6) {
+        LasContainer.checkRecord6(0, 1, 1, 0, cls, 0, 0)
+        putRecord6(rec, x, y, z, 0, 1, 1, 0, cls, 0, 0, t)
+      } else putRecord01(rec, timed = true, x, y, z, cls, t)
       rec.flip()
       while (rec.hasRemaining) ch.write(rec)
-      n += 1
-      xmin = math.min(xmin, x); xmax = math.max(xmax, x)
-      ymin = math.min(ymin, y); ymax = math.max(ymax, y)
-      zmin = math.min(zmin, z); zmax = math.max(zmax, z)
+      s.add(x, y, z, 1)
     }
-    /** Back-patch the 227-byte header; leaves the channel open. */
     def finish(): Unit = {
-      val b = ByteBuffer.allocate(HEADER_SIZE).order(ByteOrder.LITTLE_ENDIAN)
-      b.put("LASF".getBytes("US-ASCII"))
-      b.position(24); b.put(1.toByte).put(2.toByte)
-      b.position(94)
-      b.putShort(HEADER_SIZE.toShort)
-      b.putInt(HEADER_SIZE)
-      b.putInt(0)
-      b.put(1.toByte)
-      b.putShort((POINT_LEN + 8).toShort)
-      b.putInt(n)
-      b.position(131)
-      b.putDouble(Scale).putDouble(Scale).putDouble(Scale)
-      b.putDouble(0.0).putDouble(0.0).putDouble(0.0)
-      if (n == 0) { xmin = 0; xmax = 0; ymin = 0; ymax = 0; zmin = 0; zmax = 0 }
-      b.putDouble(xmax).putDouble(xmin).putDouble(ymax)
-        .putDouble(ymin).putDouble(zmax).putDouble(zmin)
-      b.flip()
+      val b = ByteBuffer.allocate(headerSize(fmt)).order(ByteOrder.LITTLE_ENDIAN)
+      s.putHeader(b, fmt, compressed = false, headerSize(fmt), numVlrs = 0)
       ch.position(0L)
       while (b.hasRemaining) ch.write(b)
     }
   }
 
-  /** Streaming LAS 1.4 format-6 writer over a seekable channel (the
-    * [[encode14]] header, back-patched; the fixed single-return record
-    * shape the DSv2 sink emits). */
-  final class StreamWriter14(ch: java.nio.channels.SeekableByteChannel) {
-    private val rec = ByteBuffer.allocate(30).order(ByteOrder.LITTLE_ENDIAN)
-    private var n = 0L
-    private var xmin, ymin, zmin = Double.MaxValue
-    private var xmax, ymax, zmax = Double.MinValue
-    ch.position(375L)
-    private def quant(v: Double): Int = {
-      val q = math.floor(v / Scale + 0.5)
-      require(q >= Int.MinValue && q <= Int.MaxValue,
-        s"coordinate $v overflows int32 at scale $Scale")
-      q.toInt
-    }
-    def add(x: Double, y: Double, z: Double, cls: Int, t: Double): Unit = {
-      require(cls >= 0 && cls <= 255, s"classification $cls")
-      rec.clear()
-      rec.putInt(quant(x)).putInt(quant(y)).putInt(quant(z))
-      rec.putShort(0.toShort)
-      rec.put((1 | (1 << 4)).toByte) // return 1 of 1
-      rec.put(0.toByte)
-      rec.put(cls.toByte)
-      rec.put(0.toByte)
-      rec.putShort(0.toShort)
-      rec.putShort(0.toShort)
-      rec.putDouble(t)
-      rec.flip()
-      while (rec.hasRemaining) ch.write(rec)
-      n += 1
-      xmin = math.min(xmin, x); xmax = math.max(xmax, x)
-      ymin = math.min(ymin, y); ymax = math.max(ymax, y)
-      zmin = math.min(zmin, z); zmax = math.max(zmax, z)
-    }
-    def finish(): Unit = {
-      val b = ByteBuffer.allocate(375).order(ByteOrder.LITTLE_ENDIAN)
-      b.put("LASF".getBytes("US-ASCII"))
-      b.putShort(6, 1.toShort)
-      b.put(24, 1.toByte); b.put(25, 4.toByte)
-      b.putShort(94, 375.toShort)
-      b.putInt(96, 375)
-      b.putInt(100, 0)
-      b.put(104, 6.toByte)
-      b.putShort(105, 30.toShort)
-      b.putInt(107, 0)
-      b.position(131)
-      b.putDouble(Scale).putDouble(Scale).putDouble(Scale)
-      b.putDouble(0.0).putDouble(0.0).putDouble(0.0)
-      if (n == 0) { xmin = 0; xmax = 0; ymin = 0; ymax = 0; zmin = 0; zmax = 0 }
-      b.putDouble(xmax).putDouble(xmin).putDouble(ymax)
-        .putDouble(ymin).putDouble(zmax).putDouble(zmin)
-      b.putLong(227, 0L); b.putLong(235, 0L); b.putInt(243, 0)
-      b.putLong(247, n)
-      b.putLong(255, n) // all records return 1 → by-return slot 1
-      b.position(0); b.limit(375)
-      ch.position(0L)
-      while (b.hasRemaining) ch.write(b)
-    }
-  }
+  /** Streaming LAS 1.2 format-1 writer. */
+  final class StreamWriter12(ch: java.nio.channels.SeekableByteChannel)
+    extends StreamWriter(ch, 1)
+
+  /** Streaming LAS 1.4 format-6 writer: the [[encode14]] header, the
+    * fixed single-return record shape the DSv2 sink emits. */
+  final class StreamWriter14(ch: java.nio.channels.SeekableByteChannel)
+    extends StreamWriter(ch, 6)
 
   /** Distributed ingest boundary: `[tile_id:int, data:binary]` LAS tiles →
     * point table `[tile_id, x, y, z, classification]`, decoded

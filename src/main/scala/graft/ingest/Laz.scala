@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   * POINTWISE_CHUNKED container — LAS header with bit 7 of the point
   * format set, the `laszip encoded` VLR (record 22204), per-chunk
   * restart of all models with the first point stored raw, and the
-  * arithmetic-coded chunk table appended at the end.
+  * arithmetic-coded chunk table appended at the end. The header, the raw
+  * first point, the VLR and the chunk table are written and parsed by
+  * [[LasContainer]]; this object holds the point item codecs.
   *
   * Scale notes: chunks (default 50 000 points) are INDEPENDENTLY
   * decodable — the chunk table gives exact byte extents, so a 100-TB
@@ -471,27 +473,8 @@ object Laz {
   }
 
   // ----------------------------------------------------------- container --
-  private val HEADER_SIZE = 227
-  private val POINT_LEN = 20
-  private val VLR_HEADER = 54
-  private val LASZIP_RECORD_ID = 22204
-  val Scale: Double = Las.Scale
+  val Scale: Double = LasContainer.Scale
   val DefaultChunkSize = 50000
-
-  private def vlrPayload(fmt: Int, chunkSize: Int): Array[Byte] = {
-    val items = if (fmt == 1) 2 else 1
-    val b = ByteBuffer.allocate(34 + 6 * items).order(ByteOrder.LITTLE_ENDIAN)
-    b.putShort(2) // compressor: POINTWISE_CHUNKED
-    b.putShort(0) // coder: arithmetic
-    b.put(2.toByte).put(2.toByte).putShort(0) // version 2.2 r0
-    b.putInt(0) // options
-    b.putInt(chunkSize)
-    b.putLong(-1L).putLong(-1L) // no special EVLRs
-    b.putShort(items.toShort)
-    b.putShort(6).putShort(POINT_LEN.toShort).putShort(2) // POINT10 v2
-    if (fmt == 1) { b.putShort(7).putShort(8).putShort(2) } // GPSTIME11 v2
-    b.array()
-  }
 
   /** (x, y, z, classification) points → chunked LAZ bytes (format 0). */
   def encode(points: Array[(Double, Double, Double, Int)],
@@ -505,31 +488,18 @@ object Laz {
 
   private def encodeImpl(points: Array[(Double, Double, Double, Int, Double)],
       fmt: Int, chunkSize: Int): Array[Byte] = {
+    import LasContainer.quant
     require(chunkSize > 0, "chunkSize must be positive")
     val n = points.length
-    val recLen = if (fmt == 1) POINT_LEN + 8 else POINT_LEN
-    val payload = vlrPayload(fmt, chunkSize)
-    val dataOff = HEADER_SIZE + VLR_HEADER + payload.length
-    def quant(v: Double): Int = {
-      val q = math.floor(v / Scale + 0.5)
-      require(q >= Int.MinValue && q <= Int.MaxValue,
-        s"coordinate $v overflows int32 at scale $Scale")
-      q.toInt
-    }
-    // --- compress chunks
     val chunks = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
     var i = 0
     while (i < n) {
       val m = math.min(chunkSize, n - i)
-      val raw = ByteBuffer.allocate(recLen).order(ByteOrder.LITTLE_ENDIAN)
+      val raw = ByteBuffer.allocate(LasContainer.recordLength(fmt))
+        .order(ByteOrder.LITTLE_ENDIAN)
       val (x0, y0, z0, c0, t0) = points(i)
       val first = P10(quant(x0), quant(y0), quant(z0), 0, 0x11, c0, 0, 0, 0)
-      raw.putInt(first.x).putInt(first.y).putInt(first.z)
-      raw.putShort(first.intensity.toShort)
-      raw.put(first.bitByte.toByte).put(first.classification.toByte)
-      raw.put(first.scanAngle.toByte).put(first.userData.toByte)
-      raw.putShort(first.pointSourceId.toShort)
-      if (fmt == 1) raw.putDouble(t0)
+      LasContainer.putRecord01(raw, fmt == 1, x0, y0, z0, c0, t0)
       val p10 = new Point10V2(forDecoding = false)
       p10.init(first)
       val gps = if (fmt == 1) {
@@ -548,56 +518,9 @@ object Laz {
       chunks += (raw.array() ++ enc.done())
       i += m
     }
-    // --- chunk table (arithmetic-coded byte sizes, context 1, previous
-    //     chunk's size as predictor — the spec's layout)
-    val tableEnc = new ArithEncoder
-    val tableIc = new IntComp(32, 2, forDecoding = false)
-    var prev = 0
-    chunks.foreach { ch =>
-      tableIc.compress(tableEnc, prev, ch.length, 1)
-      prev = ch.length
-    }
-    val tableBody = tableEnc.done()
-    val chunksLen = chunks.map(_.length).sum
-    val tableOff = dataOff + 8 + chunksLen
-    val total = tableOff + 8 + tableBody.length
-    val b = ByteBuffer.allocate(total).order(ByteOrder.LITTLE_ENDIAN)
-    // --- LAS 1.2 header with the compressed-format bit and laszip VLR
-    b.put("LASF".getBytes("US-ASCII"))
-    b.position(24)
-    b.put(1.toByte).put(2.toByte)
-    b.position(94)
-    b.putShort(HEADER_SIZE.toShort)
-    b.putInt(dataOff)
-    b.putInt(1) // one VLR (laszip)
-    b.put((fmt | 0x80).toByte) // bit 7 = LASzip-compressed
-    b.putShort(recLen.toShort)
-    b.putInt(n)
-    b.position(131)
-    b.putDouble(Scale).putDouble(Scale).putDouble(Scale)
-    b.putDouble(0.0).putDouble(0.0).putDouble(0.0)
-    def mm(f: ((Double, Double, Double, Int, Double)) => Double): (Double, Double) =
-      if (n == 0) (0.0, 0.0) else (points.map(f).max, points.map(f).min)
-    val (xmax, xmin) = mm(_._1); val (ymax, ymin) = mm(_._2); val (zmax, zmin) = mm(_._3)
-    b.putDouble(xmax).putDouble(xmin).putDouble(ymax)
-      .putDouble(ymin).putDouble(zmax).putDouble(zmin)
-    // VLR header
-    b.position(HEADER_SIZE)
-    b.putShort(0)
-    val uid = new Array[Byte](16)
-    "laszip encoded".getBytes("US-ASCII").copyToArray(uid)
-    b.put(uid)
-    b.putShort(LASZIP_RECORD_ID.toShort)
-    b.putShort(payload.length.toShort)
-    b.position(HEADER_SIZE + VLR_HEADER) // 32-byte description stays zeroed
-    b.put(payload)
-    // chunk-table offset + chunks + chunk table
-    b.putLong(tableOff.toLong)
-    chunks.foreach(ch => b.put(ch))
-    b.putInt(0) // chunk table version
-    b.putInt(chunks.length)
-    b.put(tableBody)
-    b.array()
+    val s = new LasContainer.Summary
+    points.foreach(p => s.add(p._1, p._2, p._3, 1))
+    LasContainer.writeLaszip(fmt, chunkSize, s, chunks)
   }
 
   /** LAZ bytes → (x, y, z, classification). */
@@ -619,89 +542,7 @@ object Laz {
   }
 
   /** Parse header + laszip VLR + chunk table into a [[Layout]]. */
-  def layout(bytes: Array[Byte]): Layout = {
-    val b = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(bytes.length >= HEADER_SIZE &&
-      new String(bytes, 0, 4, "US-ASCII") == "LASF", "not a LAS/LAZ file")
-    val fmtByte = b.get(104) & 0xFF
-    require((fmtByte & 0x80) != 0, "not LASzip-compressed — use Las.decode")
-    val fmt = fmtByte & 0x7F
-    require(fmt == 0 || fmt == 1, s"only point formats 0/1 supported, got $fmt")
-    val headerSize = b.getShort(94) & 0xFFFF
-    require(headerSize >= HEADER_SIZE, s"LAS header size $headerSize < $HEADER_SIZE")
-    val dataOff = b.getInt(96)
-    val numVlrs = b.getInt(100)
-    val n = b.getInt(107)
-    require(n >= 0, s"corrupt point count $n")
-    val sx = b.getDouble(131); val sy = b.getDouble(139); val sz = b.getDouble(147)
-    val ox = b.getDouble(155); val oy = b.getDouble(163); val oz = b.getDouble(171)
-    // find the laszip VLR for the chunk size — every read bounds-checked
-    // BEFORE dereferencing (hostile-input discipline shared with Laz14:
-    // a truncated or bit-flipped file must die as IllegalArgumentException,
-    // never IndexOutOfBounds)
-    var chunkSize = DefaultChunkSize
-    var off = headerSize
-    var v = 0
-    var found = false
-    while (v < numVlrs) {
-      require(off + VLR_HEADER <= bytes.length, "truncated VLR header")
-      val recId = b.getShort(off + 18) & 0xFFFF
-      val len = b.getShort(off + 20) & 0xFFFF
-      if (recId == LASZIP_RECORD_ID) {
-        require(off + VLR_HEADER + 16 <= bytes.length, "truncated laszip VLR")
-        val comp = b.getShort(off + VLR_HEADER) & 0xFFFF
-        require(comp == 2, s"only POINTWISE_CHUNKED laszip supported, got compressor $comp")
-        chunkSize = b.getInt(off + VLR_HEADER + 12)
-        require(chunkSize > 0, s"corrupt chunk size $chunkSize")
-        found = true
-      }
-      off += VLR_HEADER + len
-      v += 1
-    }
-    require(found, "laszip VLR (record 22204) not found")
-    require(dataOff >= headerSize && dataOff + 8 <= bytes.length,
-      s"point data offset $dataOff outside file")
-    // chunk table → per-chunk byte extents. The offset is a signed i64 in
-    // the stream; LASzip writes the sentinel -1 when the writer could not
-    // seek back (table then lives at EOF preceded by a forward pointer) —
-    // reject that explicitly rather than dereferencing garbage, and bound
-    // the offset before use. Int indices are safe AFTER validation because
-    // a JVM byte array is < 2 GiB by construction; files larger than that
-    // must be range-read per chunk before reaching this in-memory parser.
-    val tableOff64 = b.getLong(dataOff)
-    require(tableOff64 != -1L,
-      "LAZ chunk-table offset sentinel -1 (non-seekable writer) not supported")
-    require(tableOff64 >= dataOff + 8 && tableOff64 + 8 <= bytes.length,
-      s"LAZ chunk-table offset $tableOff64 outside [${dataOff + 8}, ${bytes.length - 8}]")
-    val tableOff = tableOff64.toInt
-    require(b.getInt(tableOff) == 0, "unsupported chunk table version")
-    val numChunks = b.getInt(tableOff + 4)
-    // pin the chunk count to the header's point count BEFORE allocating:
-    // a flipped count would otherwise size two arrays from hostile input
-    val expectChunks = if (n == 0) 0 else ((n - 1) / chunkSize) + 1
-    require(numChunks == expectChunks,
-      s"corrupt LAZ chunk table: $numChunks chunks for $n points of $chunkSize")
-    val tdec = new ArithDecoder(bytes, tableOff + 8, bytes.length)
-    val tic = new IntComp(32, 2, forDecoding = true)
-    val starts = new Array[Int](numChunks)
-    val ends = new Array[Int](numChunks)
-    val rawLen = if (fmt == 1) POINT_LEN + 8 else POINT_LEN
-    var prev = 0
-    var start = dataOff + 8
-    var c = 0
-    while (c < numChunks) {
-      prev = tic.decompress(tdec, prev, 1)
-      // a chunk must at least hold its raw first point and stay inside
-      // [data, table) — reject decoded extents that don't
-      require(prev >= rawLen && start.toLong + prev <= tableOff.toLong,
-        s"corrupt chunk extent $prev at $start")
-      starts(c) = start
-      ends(c) = start + prev
-      start = ends(c)
-      c += 1
-    }
-    Layout(fmt, n, chunkSize, sx, sy, sz, ox, oy, oz, starts, ends)
-  }
+  def layout(bytes: Array[Byte]): Layout = LasContainer.laszip(bytes, v14 = false)
 
   /** Decode ONE chunk — pure function of (bytes, layout, chunk index),
     * callable from any executor in any order. */
@@ -724,7 +565,7 @@ object Laz {
       ox: Double, oy: Double, oz: Double)
       : Array[(Double, Double, Double, Int, Double)] = {
     val b = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val recLen = if (fmt == 1) POINT_LEN + 8 else POINT_LEN
+    val recLen = LasContainer.recordLength(if (fmt == 1) 1 else 0)
     // guards for the public chunk-slice path (decodeChunkBytes): a
     // negative count or a slice shorter than the raw first point is
     // corrupt input, not an array-sizing request

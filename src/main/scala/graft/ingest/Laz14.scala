@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   *    bit 7 of the point-format byte set, `laszip encoded` VLR
   *    declaring one POINT14 (type 10, size 30, version 3) item, the
   *    i64 chunk-table offset before the chunks, and the
-  *    arithmetic-coded chunk table appended at the end — byte-for-byte
-  *    the [[Laz]] container discipline.
+  *    arithmetic-coded chunk table appended at the end — the [[Laz]]
+  *    container, written and parsed for both by [[LasContainer]].
   *  - LAYERED chunks: each chunk stores the raw 30-byte first point,
   *    then a u32 byte count PER LAYER, then the layers' arithmetic
   *    streams back to back. The nine POINT14 layers
@@ -92,11 +92,8 @@ object Laz14 {
   val NeedAll: Int = NeedZ | NeedClass | NeedIntensity | NeedScanAngle |
     NeedSource | NeedGps
 
-  private val HEADER14_SIZE = 375
-  private val POINT6_LEN = 30
-  private val VLR_HEADER = 54
-  private val LASZIP_RECORD_ID = 22204
-  val Scale: Double = Las.Scale
+  private val POINT6_LEN = LasContainer.recordLength(6)
+  val Scale: Double = LasContainer.Scale
   val DefaultChunkSize = 50000
 
   // --------------------------------------------------------- context set --
@@ -168,42 +165,12 @@ object Laz14 {
     NumberReturnLevel(math.min(n, 7))(math.min(r, 7))
 
   // -------------------------------------------------------------- encode --
-  private def quant(v: Double): Int = {
-    val q = math.floor(v / Scale + 0.5)
-    require(q >= Int.MinValue && q <= Int.MaxValue,
-      s"coordinate $v overflows int32 at scale $Scale")
-    q.toInt
-  }
-
-  private def vlrPayload(chunkSize: Int): Array[Byte] = {
-    val b = ByteBuffer.allocate(34 + 6).order(ByteOrder.LITTLE_ENDIAN)
-    b.putShort(3) // compressor: LAYERED_CHUNKED
-    b.putShort(0) // coder: arithmetic
-    b.put(3.toByte).put(4.toByte).putShort(0) // laszip version 3.4 r0
-    b.putInt(0) // options
-    b.putInt(chunkSize)
-    b.putLong(-1L).putLong(-1L) // no special EVLRs
-    b.putShort(1) // one item
-    b.putShort(10).putShort(POINT6_LEN.toShort).putShort(3) // POINT14 v3
-    b.array()
-  }
-
   /** fmt-6 points → native-LAZ (layered chunked) bytes. */
   def encode(points: Array[Las.P6],
       chunkSize: Int = DefaultChunkSize): Array[Byte] = {
     require(chunkSize > 0, "chunkSize must be positive")
+    points.foreach(LasContainer.checkRecord6)
     val n = points.length
-    points.foreach { p =>
-      require(p.returnNo >= 1 && p.returnNo <= 15 &&
-        p.nReturns >= p.returnNo && p.nReturns <= 15,
-        s"return ${p.returnNo}/${p.nReturns} outside fmt-6 4-bit fields")
-      require(p.channel >= 0 && p.channel <= 3, s"scanner channel ${p.channel}")
-      require(p.classification >= 0 && p.classification <= 255 &&
-        p.intensity >= 0 && p.intensity <= 0xffff &&
-        p.sourceId >= 0 && p.sourceId <= 0xffff &&
-        p.scanAngle >= Short.MinValue && p.scanAngle <= Short.MaxValue,
-        "fmt-6 field out of range")
-    }
     val chunks = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
     var i = 0
     while (i < n) {
@@ -211,77 +178,18 @@ object Laz14 {
       chunks += encodeChunk(points, i, m)
       i += m
     }
-    // chunk table: identical discipline to Laz (IntComp ctx 1, previous
-    // size as predictor)
-    val tableEnc = new ArithEncoder
-    val tableIc = new IntComp(32, 2, forDecoding = false)
-    var prev = 0
-    chunks.foreach { ch =>
-      tableIc.compress(tableEnc, prev, ch.length, 1)
-      prev = ch.length
-    }
-    val tableBody = tableEnc.done()
-    val payload = vlrPayload(chunkSize)
-    val dataOff = HEADER14_SIZE + VLR_HEADER + payload.length
-    val chunksLen = chunks.map(_.length).sum
-    val tableOff = dataOff + 8 + chunksLen
-    val total = tableOff + 8 + tableBody.length
-    val b = ByteBuffer.allocate(total).order(ByteOrder.LITTLE_ENDIAN)
-    // LAS 1.4 header (the Las.encode14 layout) + compression bit + VLR
-    b.put("LASF".getBytes("US-ASCII"))
-    b.putShort(6, 1.toShort) // global encoding: adjusted std GPS time
-    b.put(24, 1.toByte); b.put(25, 4.toByte)
-    b.putShort(94, HEADER14_SIZE.toShort)
-    b.putInt(96, dataOff)
-    b.putInt(100, 1) // one VLR (laszip)
-    b.put(104, (6 | 0x80).toByte) // fmt 6, bit 7 = LASzip-compressed
-    b.putShort(105, POINT6_LEN.toShort)
-    b.putInt(107, 0) // legacy count pinned 0 for fmt >= 6
-    b.position(131)
-    b.putDouble(Scale).putDouble(Scale).putDouble(Scale)
-    b.putDouble(0.0).putDouble(0.0).putDouble(0.0)
-    def mm(f: Las.P6 => Double): (Double, Double) =
-      if (n == 0) (0.0, 0.0) else (points.map(f).max, points.map(f).min)
-    val (xmax, xmin) = mm(_.x); val (ymax, ymin) = mm(_.y)
-    val (zmax, zmin) = mm(_.z)
-    b.putDouble(xmax).putDouble(xmin).putDouble(ymax)
-      .putDouble(ymin).putDouble(zmax).putDouble(zmin)
-    b.putLong(227, 0L); b.putLong(235, 0L); b.putInt(243, 0) // no EVLRs
-    b.putLong(247, n.toLong)
-    points.groupBy(_.returnNo).foreach { case (r, ps) =>
-      b.putLong(255 + 8 * (r - 1), ps.length.toLong)
-    }
-    b.position(HEADER14_SIZE)
-    b.putShort(0.toShort)
-    val uid = new Array[Byte](16)
-    "laszip encoded".getBytes("US-ASCII").copyToArray(uid)
-    b.put(uid)
-    b.putShort(LASZIP_RECORD_ID.toShort)
-    b.putShort(payload.length.toShort)
-    b.position(HEADER14_SIZE + VLR_HEADER)
-    b.put(payload)
-    b.putLong(tableOff.toLong)
-    chunks.foreach(ch => b.put(ch))
-    b.putInt(0) // chunk table version
-    b.putInt(chunks.length)
-    b.put(tableBody)
-    b.array()
+    val s = new LasContainer.Summary
+    points.foreach(p => s.add(p.x, p.y, p.z, p.returnNo))
+    LasContainer.writeLaszip(6, chunkSize, s, chunks)
   }
 
   /** One layered chunk: [raw first point][u32 × 9 layer sizes][layers]. */
   private def encodeChunk(points: Array[Las.P6], base: Int, m: Int): Array[Byte] = {
+    import LasContainer.quant
     val first = points(base)
     val raw = ByteBuffer.allocate(POINT6_LEN).order(ByteOrder.LITTLE_ENDIAN)
     val fx = quant(first.x); val fy = quant(first.y); val fz = quant(first.z)
-    raw.putInt(fx).putInt(fy).putInt(fz)
-    raw.putShort(first.intensity.toShort)
-    raw.put((first.returnNo | (first.nReturns << 4)).toByte)
-    raw.put((first.channel << 4).toByte)
-    raw.put(first.classification.toByte)
-    raw.put(0.toByte) // user data
-    raw.putShort(first.scanAngle.toShort)
-    raw.putShort(first.sourceId.toShort)
-    raw.putDouble(first.gpsTime)
+    LasContainer.putRecord6(raw, first)
 
     val ctxs = Array.fill(4)(new Ctx14(forDec = false))
     var active = first.channel
@@ -384,91 +292,12 @@ object Laz14 {
   }
 
   // -------------------------------------------------------------- decode --
-  /** Parsed layered-container layout — the unit-of-distribution facts,
-    * mirroring [[Laz.Layout]]. */
-  final case class Layout14(n: Int, chunkSize: Int,
-      sx: Double, sy: Double, sz: Double, ox: Double, oy: Double, oz: Double,
-      chunkStarts: Array[Int], chunkEnds: Array[Int]) {
-    def numChunks: Int = chunkStarts.length
-    def chunkBase(c: Int): Int = c * chunkSize
-    def chunkCount(c: Int): Int = math.min(chunkSize, n - chunkBase(c))
-  }
+  /** Parsed layered-container layout: [[Laz.Layout]] with format 6. */
+  type Layout14 = Laz.Layout
 
   /** Parse header + laszip VLR + chunk table. Corrupt input throws
     * IllegalArgumentException by name (codec-family discipline). */
-  def layout(bytes: Array[Byte]): Layout14 = {
-    require(bytes.length >= HEADER14_SIZE &&
-      new String(bytes, 0, 4, "US-ASCII") == "LASF", "not a LAS/LAZ file")
-    val b = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val (vMaj, vMin) = (bytes(24) & 0xff, bytes(25) & 0xff)
-    require(vMaj == 1 && vMin >= 4, s"not a LAS 1.4+ file (version $vMaj.$vMin)")
-    val fmtByte = b.get(104) & 0xFF
-    require((fmtByte & 0x80) != 0, "not LASzip-compressed — use Las.decode14")
-    require((fmtByte & 0x7F) == 6,
-      s"only point format 6 supported, got ${fmtByte & 0x7F}")
-    require(b.getInt(107) == 0, "legacy point count must be 0 for fmt 6")
-    val headerSize = b.getShort(94) & 0xFFFF
-    require(headerSize >= HEADER14_SIZE,
-      s"LAS 1.4 header size $headerSize < $HEADER14_SIZE")
-    val dataOff = b.getInt(96)
-    val numVlrs = b.getInt(100)
-    val n64 = b.getLong(247)
-    require(n64 >= 0 && n64 <= Int.MaxValue, s"point count $n64 out of range")
-    val n = n64.toInt
-    val sx = b.getDouble(131); val sy = b.getDouble(139); val sz = b.getDouble(147)
-    val ox = b.getDouble(155); val oy = b.getDouble(163); val oz = b.getDouble(171)
-    var chunkSize = DefaultChunkSize
-    var off = headerSize
-    var v = 0
-    var found = false
-    while (v < numVlrs) {
-      require(off + VLR_HEADER <= bytes.length, "truncated VLR header")
-      val recId = b.getShort(off + 18) & 0xFFFF
-      val len = b.getShort(off + 20) & 0xFFFF
-      if (recId == LASZIP_RECORD_ID) {
-        require(off + VLR_HEADER + 16 <= bytes.length, "truncated laszip VLR")
-        val comp = b.getShort(off + VLR_HEADER) & 0xFFFF
-        require(comp == 3,
-          s"only LAYERED_CHUNKED laszip supported for fmt 6, got compressor $comp")
-        chunkSize = b.getInt(off + VLR_HEADER + 12)
-        require(chunkSize > 0, s"corrupt chunk size $chunkSize")
-        found = true
-      }
-      off += VLR_HEADER + len
-      v += 1
-    }
-    require(found, "laszip VLR (record 22204) not found")
-    require(dataOff >= headerSize && dataOff + 8 <= bytes.length,
-      s"point data offset $dataOff outside file")
-    val tableOff64 = b.getLong(dataOff)
-    require(tableOff64 != -1L,
-      "LAZ chunk-table offset sentinel -1 (non-seekable writer) not supported")
-    require(tableOff64 >= dataOff + 8 && tableOff64 + 8 <= bytes.length,
-      s"LAZ chunk-table offset $tableOff64 outside [${dataOff + 8}, ${bytes.length - 8}]")
-    val tableOff = tableOff64.toInt
-    require(b.getInt(tableOff) == 0, "unsupported chunk table version")
-    val numChunks = b.getInt(tableOff + 4)
-    val expectChunks = if (n == 0) 0 else ((n - 1) / chunkSize) + 1
-    require(numChunks == expectChunks,
-      s"corrupt LAZ chunk table: $numChunks chunks for $n points of $chunkSize")
-    val tdec = new ArithDecoder(bytes, tableOff + 8, bytes.length)
-    val tic = new IntComp(32, 2, forDecoding = true)
-    val starts = new Array[Int](numChunks)
-    val ends = new Array[Int](numChunks)
-    var prev = 0
-    var start = dataOff + 8
-    var c = 0
-    while (c < numChunks) {
-      prev = tic.decompress(tdec, prev, 1)
-      require(prev >= POINT6_LEN + 4 * NumLayers && start + prev <= tableOff,
-        s"corrupt chunk extent $prev at $start")
-      starts(c) = start
-      ends(c) = start + prev
-      start = ends(c)
-      c += 1
-    }
-    Layout14(n, chunkSize, sx, sy, sz, ox, oy, oz, starts, ends)
-  }
+  def layout(bytes: Array[Byte]): Layout14 = LasContainer.laszip(bytes, v14 = true)
 
   /** Decode ONE chunk given only its byte slice + scalar facts — the
     * distributed work unit. `need` is a mask of Need* bits; layer 1

@@ -346,16 +346,16 @@ private[sources] class LasReaderFactory(fields: Array[String],
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val file = partition.asInstanceOf[LasInputPartition].file
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file))
-    require(bytes.length > 104, s"truncated LAS file $file")
-    val is14 = (bytes(24) & 0xff) == 1 && (bytes(25) & 0xff) >= 4
-    // full-header bound BEFORE any header-field read: both reader paths
-    // read scales/offsets at 131..178 and the 1.4 path reads the 64-bit
-    // point count at 247 — a 105..374-byte file must fail as "truncated
-    // LAS file", not with an IndexOutOfBoundsException mid-parse
-    require(bytes.length >= (if (is14) 375 else 227), s"truncated LAS file $file")
-    val compressed = (bytes(104) & 0x80) != 0
-    if (compressed) compressedReader(bytes, is14, file)
-    else rawReader(bytes, is14, file)
+    // version x compression dispatch; the codecs' header checks reject
+    // what they cannot read, and the file's name is added to the fault
+    val v14 = graft.ingest.LasContainer.isV14(bytes)
+    try {
+      if (graft.ingest.LasContainer.isCompressed(bytes)) compressedReader(bytes, v14)
+      else rawReader(bytes, graft.ingest.LasContainer.raw(bytes, v14))
+    } catch {
+      case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"$file: ${e.getMessage}", e)
+    }
   }
 
   private val needX = fields.contains("x") || pushed.xMin > Double.NegativeInfinity ||
@@ -379,34 +379,15 @@ private[sources] class LasReaderFactory(fields: Array[String],
   }
 
   /** Raw LAS 1.2 fmt 0/1 or 1.4 fmt 6: per-record offset reads. */
-  private def rawReader(bytes: Array[Byte], is14: Boolean, file: String)
+  private def rawReader(bytes: Array[Byte], h: graft.ingest.LasContainer.Header)
       : PartitionReader[InternalRow] = {
     val b = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    // header facts (both vintages share the 1.2 field positions used here;
-    // the bounds checks live in the Las codecs — reuse them by decoding
-    // the header through a zero-point probe is overkill, so re-validate)
-    val fmt = bytes(104) & 0x7f
-    val dataOff = b.getInt(96)
-    val recLen = b.getShort(105) & 0xffff
-    val n: Int =
-      if (is14) {
-        require(fmt == 6, s"only fmt 6 supported for LAS 1.4, got $fmt in $file")
-        val n64 = b.getLong(247)
-        require(n64 >= 0 && n64 <= Int.MaxValue, s"point count $n64 in $file")
-        n64.toInt
-      } else {
-        require(fmt == 0 || fmt == 1, s"only fmt 0/1 supported, got $fmt in $file")
-        b.getInt(107)
-      }
-    val minRec = if (is14) 30 else if (fmt == 1) 28 else 20
-    require(n >= 0 && dataOff >= 227 && recLen >= minRec &&
-      dataOff + n.toLong * recLen <= bytes.length,
-      s"$n records of $recLen bytes at $dataOff run past end of $file")
-    val sx = b.getDouble(131); val sy = b.getDouble(139); val sz = b.getDouble(147)
-    val ox = b.getDouble(155); val oy = b.getDouble(163); val oz = b.getDouble(171)
-    val clsOff = if (is14) 16 else 15
-    val hasT = is14 || fmt == 1
-    val tOff = if (is14) 22 else 20
+    val n = h.n; val dataOff = h.dataOff; val recLen = h.recLen
+    val sx = h.sx; val sy = h.sy; val sz = h.sz
+    val ox = h.ox; val oy = h.oy; val oz = h.oz
+    val clsOff = h.clsAt
+    val hasT = h.fmt != 0
+    val tOff = h.timeAt
     new PartitionReader[InternalRow] {
       private var i = -1
       private var cx, cy, cz, ct = 0.0
@@ -456,10 +437,10 @@ private[sources] class LasReaderFactory(fields: Array[String],
 
   /** LAZ containers: POINT10/GPSTIME11 (1.2) or POINT14 layered (1.4,
     * with the projection mapped onto the codec's layer mask). */
-  private def compressedReader(bytes: Array[Byte], is14: Boolean, file: String)
+  private def compressedReader(bytes: Array[Byte], v14: Boolean)
       : PartitionReader[InternalRow] = {
     val pts: Array[(Double, Double, Double, Int, Double)] =
-      if (is14) {
+      if (v14) {
         var mask = 0
         if (needZ) mask |= graft.ingest.Laz14.NeedZ
         if (needCls) mask |= graft.ingest.Laz14.NeedClass

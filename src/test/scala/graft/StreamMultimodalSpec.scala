@@ -36,14 +36,9 @@ class StreamMultimodalSpec extends SparkSuite {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf001/events.parquet"),
       java.nio.file.Paths.get(dir.getAbsolutePath, "events.parquet"))
-    val schema = spark.read.parquet(dir.getAbsolutePath).schema
-    val raw = spark.readStream.schema(schema).parquet(dir.getAbsolutePath)
-    val events =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts div 1000")))
-      else raw
+    val schema = Tables.read(spark, dir.getAbsolutePath).schema
+    val events = Tables.normTs(
+      spark.readStream.schema(schema).parquet(dir.getAbsolutePath))
     val q = StreamOps.sessionize(events.withWatermark("ts", "1 hour"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("sess_test").start()
@@ -67,14 +62,9 @@ class StreamMultimodalSpec extends SparkSuite {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf001/events.parquet"),
       java.nio.file.Paths.get(dir.getAbsolutePath, "events.parquet"))
-    val schema = spark.read.parquet(dir.getAbsolutePath).schema
-    val raw = spark.readStream.schema(schema).parquet(dir.getAbsolutePath)
-    val events =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts div 1000")))
-      else raw
+    val schema = Tables.read(spark, dir.getAbsolutePath).schema
+    val events = Tables.normTs(
+      spark.readStream.schema(schema).parquet(dir.getAbsolutePath))
     val q = events.withWatermark("ts", "2 hours")
       .withColumn("hour_start", date_trunc("hour", col("ts")))
       .dropDuplicates("user_id", "hour_start")
@@ -96,13 +86,8 @@ class StreamMultimodalSpec extends SparkSuite {
     // hour — the canonical stream-stream interval join, state bounded by
     // the watermark + time-range condition. Must equal the batch join.
     import org.apache.spark.sql.DataFrame
-    def loadStream(dir: String): DataFrame = {
-      val schema = spark.read.parquet(dir).schema
-      val raw = spark.readStream.schema(schema).parquet(dir)
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
-    }
+    def loadStream(dir: String): DataFrame =
+      Tables.normTs(spark.readStream.schema(Tables.read(spark, dir).schema).parquet(dir))
     val dir = java.nio.file.Files.createTempDirectory("graft-ssj").toFile
     dir.deleteOnExit()
     java.nio.file.Files.copy(
@@ -192,16 +177,12 @@ class StreamMultimodalSpec extends SparkSuite {
     copyParts("batch1", "a")
     copyParts("batch2", "b")
 
-    val schema = spark.read.parquet(stage.getAbsolutePath).schema
+    val schema = Tables.read(spark, stage.getAbsolutePath).schema
     def side(t: String, idAs: String, tsAs: String): DataFrame = {
-      val raw = spark.readStream.schema(schema)
+      val e = Tables.normTs(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .option("latestFirst", "false")
-        .parquet(stage.getAbsolutePath)
-      val e =
-        if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        else raw
+        .parquet(stage.getAbsolutePath))
       e.filter(col("event_type") === t && col("event_id") =!= -1L ||
           col("event_id") === -1L) // sentinel flows through both sides
         .select(col("user_id").as(s"${idAs}_u"), col("event_id").as(idAs),
@@ -428,14 +409,9 @@ class StreamMultimodalSpec extends SparkSuite {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf001/events.parquet"),
       java.nio.file.Paths.get(dir.getAbsolutePath, "b.parquet"))
-    val schema = spark.read.parquet(dir.getAbsolutePath).schema
-    val raw = spark.readStream.schema(schema).parquet(dir.getAbsolutePath)
-    val events =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts div 1000")))
-      else raw
+    val schema = Tables.read(spark, dir.getAbsolutePath).schema
+    val events = Tables.normTs(
+      spark.readStream.schema(schema).parquet(dir.getAbsolutePath))
     val q = events.withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy().count()
